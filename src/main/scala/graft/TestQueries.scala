@@ -1404,12 +1404,12 @@ object TestQueries {
     * cluster columns into range quarters (global min/max scalars broadcast
     * back — one extra tiny aggregate, no sketch), Morton-interleave the
     * bucket bits through [[sources.Layout.interleave]] (the exact bit math
-    * `zorderWrite` files by), and report per-cell row counts and column
-    * extents — the statistic parquet min/max pruning sees. No filesystem
-    * write, so the result is environment-independent and the DuckDB oracle
-    * replicates the full bucket+interleave arithmetic; the write path
-    * (repartitionByRange + per-file extents, sampled quantile cuts) stays
-    * covered by LayoutSpec.
+    * `VersionedLake.optimizeZOrder` slices by), and report per-cell row
+    * counts and column extents — the statistic parquet min/max pruning
+    * sees. No filesystem write, so the result is environment-independent
+    * and the DuckDB oracle replicates the full bucket+interleave
+    * arithmetic; the write path (z-range slices + per-file extents,
+    * sampled quantile cuts) stays covered by LayoutSpec.
     */
   def q66ZorderStats(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")

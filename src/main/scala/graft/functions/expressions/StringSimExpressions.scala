@@ -236,8 +236,8 @@ case class JaroWinklerSim(left: Expression, right: Expression)
   * `minSim = threshold − 1e-6` (d ≤ 6) so the gate clears the rounding
   * margin.
   */
-case class JaroWinklerGteSim(left: Expression, right: Expression,
-                             minSim: Double)
+private[graft] case class JaroWinklerGteSim(left: Expression,
+                                            right: Expression, minSim: Double)
     extends BinaryExpression with ImplicitCastInputTypes
     with BinaryComputeCallCodegen {
   override def inputTypes = Seq(StringType, StringType)
@@ -363,7 +363,8 @@ object StringSimExpressions {
     ColumnShim.column(JaroSim(ColumnShim.expression(a), ColumnShim.expression(b)))
   def jaroWinkler(a: Column, b: Column): Column =
     ColumnShim.column(JaroWinklerSim(ColumnShim.expression(a), ColumnShim.expression(b)))
-  def jaroWinklerGte(a: Column, b: Column, minSim: Double): Column =
+  /** [[JaroWinklerGteSim]]: meaningful only under a `>= minSim` filter. */
+  private[graft] def jaroWinklerGte(a: Column, b: Column, minSim: Double): Column =
     ColumnShim.column(JaroWinklerGteSim(
       ColumnShim.expression(a), ColumnShim.expression(b), minSim))
   def multiContains(text: Column, terms: Seq[String]): Column =

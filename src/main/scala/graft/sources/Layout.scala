@@ -77,20 +77,4 @@ object Layout {
     interleave(cols.zip(cuts).map { case (c, b) => bucketOf(col(c), b) },
       bitsPerCol)
   }
-
-  /** Write `df` clustered on the Z-curve: range-partition by the key (file
-    * count = `numFiles`), sort within each partition, drop the key. Range
-    * partitioning keeps the curve contiguous per file so min/max stats are
-    * tight on every z-ordered column.
-    */
-  def zorderWrite(df: DataFrame, cols: Seq[String], path: String,
-                  numFiles: Int, bitsPerCol: Int = 4,
-                  sampleFraction: Double = 1.0): Unit = {
-    val keyed = df.withColumn("__z",
-      zorderKey(df, cols, bitsPerCol, sampleFraction))
-    keyed.repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-  }
 }

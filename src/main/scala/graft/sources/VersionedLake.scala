@@ -34,8 +34,8 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Readers resolve a manifest once, then read only the immutable data dirs
   * it references: a concurrent commit cannot disturb an in-flight reader
-  * (snapshot isolation — the gap `Lake.upsert` documents is closed here),
-  * and any retained older version reads the same way (time travel).
+  * (snapshot isolation — an overwrite of plain parquet files cannot give
+  * that), and any retained older version reads the same way (time travel).
   * [[vacuum]] derives liveness from the retained manifests, never from
   * directory listings, exactly like Delta VACUUM.
   *
@@ -312,6 +312,48 @@ final case class VersionedLake(root: String) {
     val v = currentVersion(spark, zone, table) + 1
     commitManifest(spark, t, v, partitionCols, entries, Some(df.schema.json))
     v
+  }
+
+  /** Append `df` as ONE snapshot commit: a new data commit whose entries
+    * publish after every current entry, so a reader sees all of the
+    * appended rows or none of them. Partitioning and schema come from the
+    * manifest; an absent table is created unpartitioned with `df`'s
+    * schema. Every appended column must be a table column of the same
+    * type (a table column `df` lacks reads back NULL for its rows). The
+    * data is written once; a lost commit race only re-reads the new
+    * current manifest and re-publishes (an append commutes with whatever
+    * won). Returns the committed version.
+    */
+  def append(df: DataFrame, zone: String, table: String): Int = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val spark = df.sparkSession
+    val t = tablePath(zone, table)
+    def current(): Manifest = {
+      val cur = currentVersion(spark, zone, table)
+      val m =
+        if (cur == 0) Manifest(0, Nil, Nil, Some(df.schema.json))
+        else readManifest(spark, t, cur)
+      for (json <- m.schemaJson) {
+        val schema = DataType.fromJson(json).asInstanceOf[StructType]
+        for (f <- df.schema) {
+          val have = schema.find(_.name == f.name)
+          require(have.exists(_.dataType == f.dataType),
+            s"append column ${f.name} ${f.dataType.simpleString} does not fit " +
+              s"$zone/$table: " + have.fold("no such column")(_.dataType.simpleString))
+        }
+      }
+      m
+    }
+    val partitionCols = current().partitionCols
+    val added = writeDataCommit(t, df, partitionCols)
+    retryingCommit(5) {
+      val m = current()
+      require(m.partitionCols == partitionCols,
+        s"$zone/$table was repartitioned by ${m.partitionCols} during the append")
+      val v = m.version + 1
+      commitManifest(spark, t, v, partitionCols, m.entries ++ added, m.schemaJson)
+      v
+    }
   }
 
   /** Read a snapshot — the current one, or any retained `version` (time
@@ -761,12 +803,13 @@ final case class VersionedLake(root: String) {
     else readDirs(spark, t, pruned, m.schemaJson).where(predicate)
   }
 
-  /** MERGE-style keyed upsert with the same semantics as [[Lake.upsert]]
-    * (greatest `versionCol` wins, incoming wins ties, winning `deleteCol`
-    * rows drop their key) — but committed as a NEW SNAPSHOT: only touched
-    * partitions get new data dirs; every untouched partition's entry is
-    * carried forward verbatim, and readers of older versions are unaffected.
-    * Returns the committed version.
+  /** MERGE-style keyed upsert: the greatest `versionCol` wins, incoming
+    * rows win ties, and winning `deleteCol` rows drop their key (the flag
+    * never persists; a `deleteCol` that names a stored column is refused).
+    * Committed as a NEW SNAPSHOT: only touched partitions get new data
+    * dirs; every untouched partition's entry is carried forward verbatim,
+    * and readers of older versions are unaffected. Returns the committed
+    * version.
     */
   def upsert(spark: SparkSession, zone: String, table: String,
              updates: DataFrame, key: String, versionCol: String,

@@ -32,14 +32,15 @@ object DocStreams {
     *     against the standing table via the bloom-prefilter + exact-verify
     *     path ([[graft.operators.Incremental.newRows]] — replay-idempotent
     *     without a marker, same contract as `EventStreams.dedupToLake`);
-    *  4. append survivors (fingerprint persisted as `fp` for the next
-    *     batch's verify — no rescan of text).
+    *  4. append survivors as one snapshot commit
+    *     ([[graft.sources.VersionedLake.append]]; fingerprint persisted as
+    *     `fp` for the next batch's verify — no rescan of text).
     *
     * SCALE: each batch touches the standing table only through the bloom
     * sidecar + the id-join verify; text never joins against the corpus.
     */
-  def curateToLake(docs: DataFrame, lake: graft.sources.Lake, zone: String,
-                   table: String, checkpoint: String,
+  def curateToLake(docs: DataFrame, lake: graft.sources.VersionedLake,
+                   zone: String, table: String, checkpoint: String,
                    minQuality: Double = 0.0,
                    expectedItems: Long = 1L << 20):
       org.apache.spark.sql.streaming.StreamingQuery =
@@ -53,16 +54,11 @@ object DocStreams {
           .where(Text.qualityScore(col("text")) >= minQuality)
           .withColumn("fp", Text.fingerprint(col("text")))
           .dropDuplicates("fp")
-        val p = lake.path(zone, table)
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val exists = hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
         val survivors =
-          if (!exists) cleaned
+          if (lake.currentVersion(spark, zone, table) == 0) cleaned
           else graft.operators.Incremental.newRows(cleaned,
             lake.read(spark, zone, table).select("fp"), "fp", expectedItems)
-        // pin BEFORE appending: the survivor plan reads the directory it
-        // appends to (same rule as EventStreams.dedupToLake)
-        survivors.localCheckpoint().write.mode("append").parquet(p)
+        lake.append(survivors, zone, table): Unit
       }
       .start()
 
@@ -84,8 +80,9 @@ object DocStreams {
     *     lake's stored `fp` column ([[graft.operators.Incremental.newRows]]
     *     — bloom prefilter + exact verify, never a text join): this is
     *     what makes replay idempotent for docs the band keys cannot see;
-    *  4. the new docs append to the lake (with `fp` persisted), THEN the
-    *     near-dup survivors' band keys append to the corpus-key artifact,
+    *  4. the new docs append to the lake as one snapshot commit (with
+    *     `fp` persisted), THEN the near-dup survivors' band keys append to
+    *     the plain-parquet corpus-key artifact,
     *     so the NEXT batch screens against them — the artifact grows
     *     incrementally, no corpus rescan ever;
     *  5. every `compactEveryBatches` micro-batches (default 64; 0
@@ -95,8 +92,9 @@ object DocStreams {
     *     Serial micro-batches make the in-stream swap safe; an
     *     interrupted swap rolls FORWARD at the next batch.
     *
-    * Replay safety, case by case (the two appends are separate
-    * non-atomic writes, so every crash window must be idempotent):
+    * Replay safety, case by case (the lake commit and the key append are
+    * two separate writes, so every crash window between them must be
+    * idempotent):
     *
     *  - full replay (checkpoint lost): normal-length docs collide with
     *    their own stored band keys and drop at step 1; sub-shingle docs
@@ -111,7 +109,7 @@ object DocStreams {
     *    collides at the key screen (normal docs) or the fingerprint pass
     *    (sub-shingle docs); neither write repeats.
     */
-  def nearDupCurateToLake(docs: DataFrame, lake: graft.sources.Lake,
+  def nearDupCurateToLake(docs: DataFrame, lake: graft.sources.VersionedLake,
                           zone: String, table: String,
                           corpusKeysPath: String, checkpoint: String,
                           shingleSize: Int = 3, numHashes: Int = 16,
@@ -149,17 +147,13 @@ object DocStreams {
             graft.operators.Dedup.fingerprintKeepIds(nearKept, "doc_id",
               "text").select("doc_id"),
             Seq("doc_id"), "left_semi")
-          .localCheckpoint() // pinned: read before the writes land below
-        val lakePath = lake.path(zone, table)
-        val lp = new org.apache.hadoop.fs.Path(lakePath)
-        val lakeExists = lp.getFileSystem(conf).exists(lp)
+          // pinned: the screen reads the key artifact appended to below
+          .localCheckpoint()
         val newToLake =
-          if (!lakeExists) survivors
+          if (lake.currentVersion(spark, zone, table) == 0) survivors
           else graft.operators.Incremental.newRows(survivors,
-              lake.read(spark, zone, table).select("fp"), "fp",
-              expectedItems)
-            .localCheckpoint() // plan reads the directory it appends to
-        newToLake.write.mode("append").parquet(lakePath)
+            lake.read(spark, zone, table).select("fp"), "fp", expectedItems)
+        lake.append(newToLake, zone, table)
         // keys derive from the near-dup SURVIVORS (not newToLake): in the
         // crash-after-lake-append window the replayed docs are fp-dropped
         // from the lake append but their band keys still have to land

@@ -104,20 +104,25 @@ object EventStreams {
       .select("user_id", "click_id", "click_ts", "purchase_ts", "amount")
   }
 
-  /** Incremental ingest: each micro-batch MERGEs into a lake table on
-    * `event_id` via [[graft.sources.Lake.upsert]] (stream → silver, the
-    * medallion hand-off). foreachBatch gives exactly-once per batch-id
-    * together with the checkpoint; re-delivered rows collapse in the upsert.
+  /** Incremental ingest (stream → silver, the medallion hand-off): each
+    * micro-batch MERGEs into a [[graft.sources.VersionedLake]] table on
+    * `event_id` via [[graft.sources.VersionedLake.upsert]] — one committed
+    * snapshot per batch, so concurrent readers never observe a
+    * half-written micro-batch, replayed batches and re-delivered rows
+    * collapse in the keyed merge, maintenance jobs racing the stream
+    * resolve through the commit-retry loop, and any retained version
+    * time-travels. The plain-parquet emulation of a streaming Delta MERGE
+    * sink.
     */
-  def upsertToLake(events: DataFrame, lake: graft.sources.Lake, zone: String,
-                   table: String, checkpoint: String):
+  def upsertToLake(events: DataFrame, lake: graft.sources.VersionedLake,
+                   zone: String, table: String, checkpoint: String):
       org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         lake.upsert(batch.sparkSession, zone, table, batch.toDF(),
-          key = "event_id", versionCol = "ts")
+          key = "event_id", versionCol = "ts"): Unit
       }
       .start()
 
@@ -312,41 +317,20 @@ object EventStreams {
       .start()
   }
 
-  /** Incremental ingest with SNAPSHOT ISOLATION: like [[upsertToLake]] but
-    * each micro-batch MERGEs into a [[graft.sources.VersionedLake]] table —
-    * one committed snapshot per batch, so concurrent readers never observe
-    * a half-written micro-batch (the residual gap plain parquet leaves),
-    * replayed batches collapse in the keyed merge, maintenance jobs racing
-    * the stream resolve through the commit-retry loop, and any retained
-    * version time-travels. This is the plain-parquet emulation of a
-    * streaming Delta MERGE sink.
-    */
-  def upsertToVersionedLake(events: DataFrame,
-                            lake: graft.sources.VersionedLake, zone: String,
-                            table: String, checkpoint: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        lake.upsert(batch.sparkSession, zone, table, batch.toDF(),
-          key = "event_id", versionCol = "ts"): Unit
-      }
-      .start()
-
   /** Streaming ingest dedup — the continuous form of
     * [[graft.operators.Incremental.newRows]]: each micro-batch is reduced
     * to rows unique within the batch AND absent from the standing table,
-    * and only those survivors are APPENDED. The bloom sketch prefilters
+    * and only those survivors are APPENDED, as one snapshot commit
+    * ([[graft.sources.VersionedLake.append]]). The bloom sketch prefilters
     * the batch scan-side; bloom-positive rows verify with an exact
-    * anti-join, so no duplicate key is ever appended.
+    * anti-join, so no duplicate key is ever appended. The survivor plan
+    * reads the manifest-resolved snapshot, so it never sees the dirs its
+    * own append writes.
     *
     * Replay is key-idempotent WITHOUT a marker: a re-delivered batch's
     * keys are already in the table, so the filter drops them — unlike the
     * additive fold in [[hourlyGoldToLake]], which needs the batch-id
-    * marker. Residual on plain parquet: a crash mid-append can leave a
-    * torn multi-file append visible; Delta/Iceberg commit the append
-    * atomically at the same call site.
+    * marker.
     *
     * The sketch is rebuilt from the standing table each batch (simple and
     * correct); a long-running deployment caches it and refreshes on corpus
@@ -355,32 +339,27 @@ object EventStreams {
     * per-batch sketch build pays for the declared size whether or not the
     * table has grown into it.
     */
-  def dedupToLake(events: DataFrame, lake: graft.sources.Lake, zone: String,
-                  table: String, keyCol: String, checkpoint: String,
-                  expectedItems: Long = 1L << 20):
+  def dedupToLake(events: DataFrame, lake: graft.sources.VersionedLake,
+                  zone: String, table: String, keyCol: String,
+                  checkpoint: String, expectedItems: Long = 1L << 20):
       org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        val p = lake.path(zone, table)
         val fresh = batch.toDF().dropDuplicates(keyCol)
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val exists = hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
         val survivors =
-          if (!exists) fresh
+          if (lake.currentVersion(spark, zone, table) == 0) fresh
           else graft.operators.Incremental.newRows(fresh,
             lake.read(spark, zone, table).select(keyCol), keyCol, expectedItems)
-        // pin BEFORE the append: the survivor plan reads the same directory
-        // it appends to, and a lazy plan could list the newly-written files
-        survivors.localCheckpoint().write.mode("append").parquet(p)
+        lake.append(survivors, zone, table): Unit
       }
       .start()
 
   /** Incremental gold-aggregate maintenance: each micro-batch partial-
     * aggregates locally, then folds into the gold table via
-    * [[graft.sources.Lake.mergeAggregate]] — the batch view of a
+    * [[graft.sources.VersionedLake.mergeAggregate]] — the batch view of a
     * continuously-maintained rollup (counts/sums are additive, so
     * batch-at-a-time folding is exact regardless of batch boundaries).
     *
@@ -391,15 +370,15 @@ object EventStreams {
     * batch can replay).
     *
     * RESIDUAL WINDOW — the marker narrows, but does not close, the
-    * double-fold hazard: a crash after `mergeAggregate` overwrites the table
-    * but before the marker write leaves the fold applied with a stale
-    * marker, so the replayed batch folds twice. Plain parquet offers no
-    * atomic multi-file commit, so fold+marker cannot be made transactional
-    * here; on Delta/Iceberg the fix is exact — record `batchId` in the same
-    * commit as the MERGE (e.g. `txnAppId`/`txnVersion`) and the replay check
-    * becomes transactional with the data.
+    * double-fold hazard: a crash after the `mergeAggregate` commit but
+    * before the marker write leaves the fold applied with a stale marker,
+    * so the replayed batch folds twice. The fold is one atomic snapshot
+    * commit, but the marker is a separate file; on Delta/Iceberg the fix
+    * is exact — record `batchId` in the same commit as the MERGE (e.g.
+    * `txnAppId`/`txnVersion`) and the replay check becomes transactional
+    * with the data.
     */
-  def hourlyGoldToLake(events: DataFrame, lake: graft.sources.Lake,
+  def hourlyGoldToLake(events: DataFrame, lake: graft.sources.VersionedLake,
                        zone: String, table: String, checkpoint: String):
       org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream
@@ -408,7 +387,7 @@ object EventStreams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
         val marker = new org.apache.hadoop.fs.Path(
-          lake.path(zone, table) + "._applied_batch")
+          lake.tablePath(zone, table) + "._applied_batch")
         val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
         val lastApplied =
           if (fs.exists(marker)) {

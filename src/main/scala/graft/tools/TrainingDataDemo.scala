@@ -3,7 +3,7 @@ package graft.tools
 import graft.Engine
 import graft.functions.Text
 import graft.operators.{CorpusPipeline, Dedup, Quality, Splits}
-import graft.sources.{Lake, Layout, Snapshot, Tables}
+import graft.sources.{Snapshot, Tables, VersionedLake}
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-data curation demo — the extension operators chained
@@ -22,7 +22,7 @@ object TrainingDataDemo {
     val lakeRoot = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-training-lake").toString)
     val spark = Engine.localSession(appName = "training-data-demo")
-    val lake = Lake(lakeRoot)
+    val lake = VersionedLake(lakeRoot)
 
     // 1. bronze: raw ingest
     val docs = Tables.load(spark, sfDir, "documents")
@@ -75,8 +75,8 @@ object TrainingDataDemo {
     require(failed == 0, s"$failed audit checks failed — aborting promotion")
 
     // 6. silver: z-ordered on (n_chars, quality) for stat-based pruning
-    Layout.zorderWrite(prepared, Seq("n_chars", "quality"),
-      lake.path("silver", "documents"), numFiles = 8)
+    lake.write(prepared, "silver", "documents")
+    lake.optimizeZOrder(spark, "silver", "documents", Seq("n_chars", "quality"))
     val silver = lake.read(spark, "silver", "documents")
     println(s"silver: ${silver.count()} docs, z-ordered → silver/documents")
 

@@ -305,17 +305,6 @@ class DedupSpec extends AnyFunSuite {
     assert(keptMd5 === Set(10L, 12L))
   }
 
-  test("lake zones: write/read/promote across a file:// root") {
-    val root = java.nio.file.Files.createTempDirectory("graft-lake").toString
-    val lake = graft.sources.Lake(root)
-    lake.write(docs, "bronze", "docs")
-    assert(lake.read(spark, "bronze", "docs").count() === 5)
-    lake.promote(spark, "bronze", "silver", "docs",
-      df => df.where(org.apache.spark.sql.functions.col("doc_id") <= 3))
-    assert(lake.read(spark, "silver", "docs").count() === 3)
-    assert(lake.path("gold", "t") === s"$root/gold/t")
-  }
-
   test("group MinHash union sketches estimate cross-group Jaccard") {
     val grouped = Seq(
       ("s1", "alpha beta gamma delta epsilon zeta eta theta"),

@@ -15,8 +15,8 @@ class LayoutSpec extends AnyFunSuite {
       col("id"))
 
   /** Per-file average extent of a column (fraction of its full range). */
-  private def avgExtent(path: String, c: String): Double = {
-    val stats = spark.read.parquet(path)
+  private def avgExtent(df: org.apache.spark.sql.DataFrame, c: String): Double = {
+    val stats = df
       .groupBy(input_file_name())
       .agg((max(col(c)) - min(col(c))).as("ext"))
       .agg(avg("ext")).head().getDouble(0)
@@ -25,14 +25,17 @@ class LayoutSpec extends AnyFunSuite {
 
   test("z-order clusters BOTH dimensions; single-column sort only one") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-zorder")
-    val zPath = s"$tmp/z"
+    val vl = graft.sources.VersionedLake(s"file://$tmp/lake")
+    vl.write(grid, "silver", "z")
+    vl.optimizeZOrder(spark, "silver", "z", Seq("x", "y"), slicesPerPartition = 16)
+    val z = vl.read(spark, "silver", "z")
     val xPath = s"$tmp/xsort"
-    Layout.zorderWrite(grid, Seq("x", "y"), zPath, numFiles = 16)
     grid.repartitionByRange(16, col("x")).sortWithinPartitions("x")
       .write.mode("overwrite").parquet(xPath)
+    val xs = spark.read.parquet(xPath)
 
-    val (zx, zy) = (avgExtent(zPath, "x"), avgExtent(zPath, "y"))
-    val (sx, sy) = (avgExtent(xPath, "x"), avgExtent(xPath, "y"))
+    val (zx, zy) = (avgExtent(z, "x"), avgExtent(z, "y"))
+    val (sx, sy) = (avgExtent(xs, "x"), avgExtent(xs, "y"))
     // x-sort: near-perfect on x, useless on y (full extent)
     assert(sx < 0.15, s"x-sort x extent $sx")
     assert(sy > 0.7, s"x-sort y extent $sy")
@@ -42,7 +45,7 @@ class LayoutSpec extends AnyFunSuite {
     // and strictly better than the sorted layout on the unsorted dimension
     assert(zy < sy / 2)
     // no rows lost or duplicated by the rewrite
-    assert(spark.read.parquet(zPath).count() === 10000)
+    assert(z.count() === 10000)
   }
 
   test("zorderKey interleaves bucket bits") {

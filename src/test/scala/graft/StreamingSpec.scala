@@ -183,7 +183,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("foreachBatch ingest dedup appends only corpus-new keys; replay is key-idempotent") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-dedup")
-    val lake = graft.sources.Lake(s"file://$tmp/lake")
+    val lake = graft.sources.VersionedLake(s"file://$tmp/lake")
     val q = EventStreams.dedupToLake(
       EventStreams.readStream(spark, dupEventsDir), lake, "bronze", "events_new",
       keyCol = "event_id", checkpoint = s"$tmp/chk")
@@ -225,7 +225,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("foreachBatch upsert streams micro-batches into a lake table") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-lake-stream")
-    val lake = graft.sources.Lake(s"file://$tmp/lake")
+    val lake = graft.sources.VersionedLake(s"file://$tmp/lake")
     val q = EventStreams.upsertToLake(
       EventStreams.readStream(spark, dupEventsDir), lake, "silver", "events",
       checkpoint = s"$tmp/chk")
@@ -250,7 +250,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch upsert into a VERSIONED lake commits one snapshot per batch") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-vlake-stream")
     val vl = graft.sources.VersionedLake(s"file://$tmp/lake")
-    val q = EventStreams.upsertToVersionedLake(
+    val q = EventStreams.upsertToLake(
       EventStreams.readStream(spark, dupEventsDir), vl, "silver", "events",
       checkpoint = s"$tmp/chk")
     q.processAllAvailable()
@@ -278,10 +278,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(vl.read(spark, "silver", "events", Some(vs.last)).count() === 5)
   }
 
+  test("streamed hourly gold equals the batch aggregate") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-gold-stream")
+    val vl = graft.sources.VersionedLake(s"file://$tmp/lake")
+    val q = EventStreams.hourlyGoldToLake(
+      EventStreams.readStream(spark, eventsDir), vl, "gold", "hourly",
+      checkpoint = s"$tmp/chk")
+    q.processAllAvailable()
+    q.stop()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("hour_start", "event_type").collect()
+        .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
+    val batch = rows(EventStreams.hourlyTypeCounts(spark.read.parquet(eventsDir)))
+    assert(rows(vl.read(spark, "gold", "hourly")) === batch)
+  }
+
   test("streaming doc curation: NFC collapses cross-encoding dups, quality floor holds, replay appends nothing") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-docstream").toString
-    val lake = graft.sources.Lake(s"$tmp/lake")
+    val lake = graft.sources.VersionedLake(s"$tmp/lake")
     def write(dir: String, rows: Seq[(Long, String)]): Unit =
       rows.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -324,7 +340,7 @@ class StreamingSpec extends AnyFunSuite {
   test("nearDupCurateToLake: batch-local near-dups collapse, corpus keys grow, replay appends nothing") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-neardup").toString
-    val lake = graft.sources.Lake(s"$tmp/lake")
+    val lake = graft.sources.VersionedLake(s"$tmp/lake")
     val keysPath = s"$tmp/corpus_keys"
     def write(dir: String, rows: Seq[(Long, String)]): Unit =
       rows.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
@@ -372,7 +388,7 @@ class StreamingSpec extends AnyFunSuite {
   test("nearDupCurateToLake: sub-shingle docs replay-idempotent via the fingerprint rescue screen") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-shortdoc").toString
-    val lake = graft.sources.Lake(s"$tmp/lake")
+    val lake = graft.sources.VersionedLake(s"$tmp/lake")
     val keysPath = s"$tmp/corpus_keys"
     def write(dir: String, rows: Seq[(Long, String)]): Unit =
       rows.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
@@ -406,7 +422,7 @@ class StreamingSpec extends AnyFunSuite {
   test("compactCorpusKeys: screen results identical pre/post, file count bounded") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    val lake = graft.sources.Lake(s"$tmp/lake")
+    val lake = graft.sources.VersionedLake(s"$tmp/lake")
     val keysPath = s"$tmp/corpus_keys"
     def write(dir: String, rows: Seq[(Long, String)]): Unit =
       rows.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
@@ -449,7 +465,7 @@ class StreamingSpec extends AnyFunSuite {
     "count bounded over a 20-micro-batch stream, no manual compaction") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-autocomp").toString
-    val lake = graft.sources.Lake(s"$tmp/lake")
+    val lake = graft.sources.VersionedLake(s"$tmp/lake")
     val keysPath = s"$tmp/corpus_keys"
     val src = s"$tmp/drops"
     new java.io.File(src).mkdirs()

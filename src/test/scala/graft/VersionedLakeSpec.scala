@@ -22,9 +22,63 @@ class VersionedLakeSpec extends AnyFunSuite {
     assert(vl.read(spark, "silver", "t").count() === 1) // current = v2
   }
 
+  test("append: one snapshot per call, old readers keep theirs, races retry, " +
+    "partitioning comes from the manifest") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val vl = newLake()
+    // an absent table is created (unpartitioned) by the first append
+    assert(vl.append(Seq((1L, 1L, "a")).toDF("k", "ver", "v"), "silver", "ap") === 1)
+    val pinned = vl.read(spark, "silver", "ap") // manifest resolved NOW
+    assert(vl.append(Seq((2L, 1L, "b"), (3L, 1L, "c")).toDF("k", "ver", "v"),
+      "silver", "ap") === 2)
+    assert(vl.versions(spark, "silver", "ap") === Seq(1, 2))
+    assert(vl.read(spark, "silver", "ap").count() === 3)
+    assert(pinned.select("k").as[Long].collect().toSeq === Seq(1L))
+    // an append racing an upsert: the loser retries, both effects land
+    for (round <- 0 until 3) {
+      val a = Future(vl.append(Seq((100L + round, 1L, "x")).toDF("k", "ver", "v"),
+        "silver", "ap"))
+      val u = Future(vl.upsert(spark, "silver", "ap",
+        Seq((1L, 2L + round, s"u$round")).toDF("k", "ver", "v"), "k", "ver"))
+      val (va, vu) = (Await.result(a, 120.seconds), Await.result(u, 120.seconds))
+      assert(Set(va, vu).size === 2, s"round $round: versions $va/$vu collided")
+      val rows = vl.read(spark, "silver", "ap").select("k", "v")
+        .as[(Long, String)].collect().toMap
+      assert(rows.get(100L + round).contains("x"), s"round $round: append lost")
+      assert(rows.get(1L).contains(s"u$round"), s"round $round: upsert lost")
+    }
+    assert(vl.currentVersion(spark, "silver", "ap") === 8) // 2 + 3×2
+    assert(vl.read(spark, "silver", "ap").count() === 6)
+    // appended columns must be table columns of the same type; refused
+    // appends commit nothing
+    intercept[IllegalArgumentException] {
+      vl.append(Seq((8L, 1L, 5)).toDF("k", "ver", "v"), "silver", "ap")
+    }
+    intercept[IllegalArgumentException] {
+      vl.append(Seq((9L, 1L, "n", "note")).toDF("k", "ver", "v", "extra"),
+        "silver", "ap")
+    }
+    assert(vl.currentVersion(spark, "silver", "ap") === 8)
+    // a partitioned table: the append lays out its rows by the manifest's
+    // partition columns, one entry per touched partition, and a later
+    // partition-scoped upsert folds the appended entries like any other
+    vl.write(Seq(("p1", 1L, 1L)).toDF("p", "k", "ver"), "silver", "pap",
+      partitionCols = Seq("p"))
+    vl.append(Seq(("p1", 2L, 1L), ("p2", 3L, 1L)).toDF("p", "k", "ver"),
+      "silver", "pap")
+    assert(vl.candidateEntries(spark, "silver", "pap", lit(true))
+      .map(_.key).sorted === Seq("p1", "p1", "p2"))
+    vl.upsert(spark, "silver", "pap", Seq(("p1", 2L, 2L)).toDF("p", "k", "ver"),
+      "k", "ver", partitionCols = Seq("p"))
+    assert(vl.read(spark, "silver", "pap").select("k", "ver")
+      .as[(Long, Long)].collect().sorted.toSeq === Seq((1L, 1L), (2L, 2L), (3L, 1L)))
+  }
+
   test("snapshot isolation: a reader resolved before a commit keeps the old snapshot") {
-    // This is the exact scenario LakeSpec documents as a GAP for plain
-    // parquet ("plain-parquet isolation gap" test): here it must PASS.
+    // A plain-parquet overwrite cannot give this: a reader resolved before
+    // the overwrite fails or sees the new files. Here it must PASS.
     val vl = newLake()
     vl.write(Seq(("a", 1L)).toDF("k", "n"), "silver", "iso")
     val pinned = vl.read(spark, "silver", "iso") // manifest resolved NOW
@@ -93,6 +147,33 @@ class VersionedLakeSpec extends AnyFunSuite {
     assert(vl.read(spark, "silver", "del").where($"k" === "a").count() === 1)
   }
 
+  test("upsert refuses a delete flag that collides with a persisted column") {
+    val vl = newLake()
+    vl.upsert(spark, "silver", "collide",
+      Seq(("a", 1L, true)).toDF("k", "ver", "is_deleted"), "k", "ver")
+    // 'is_deleted' is now business data in the table; using it as the flag
+    // would let stored values delete keys this batch never touched
+    intercept[IllegalArgumentException] {
+      vl.upsert(spark, "silver", "collide",
+        Seq(("b", 1L, false)).toDF("k", "ver", "is_deleted"), "k", "ver",
+        deleteCol = Some("is_deleted"))
+    }
+    assert(vl.currentVersion(spark, "silver", "collide") === 1) // no commit
+    assert(vl.read(spark, "silver", "collide").count() === 1)
+  }
+
+  test("lake roots are scheme-agnostic: abfss:// paths compose like file://") {
+    // The ADLS claim is config-only (hadoop-azure auth keys), not code:
+    // path arithmetic must be identical for any Hadoop filesystem scheme.
+    // No I/O here; the file:// round trips in the other tests exercise the
+    // same code path end to end.
+    val adls = VersionedLake("abfss://corpus@lakeacct.dfs.core.windows.net/graft/")
+    assert(adls.tablePath("silver", "documents") ===
+      "abfss://corpus@lakeacct.dfs.core.windows.net/graft/silver/documents")
+    val hdfs = VersionedLake("hdfs://nn:8020/warehouse")
+    assert(hdfs.tablePath("gold", "hourly") === "hdfs://nn:8020/warehouse/gold/hourly")
+  }
+
   test("mergeAggregate folds additively and only rewrites touched partitions") {
     val vl = newLake()
     vl.mergeAggregate(spark, "gold", "agg",
@@ -111,6 +192,94 @@ class VersionedLakeSpec extends AnyFunSuite {
     val h2v2 = vl.read(spark, "gold", "agg", Some(2)).where($"hr" === "h2")
       .select(input_file_name()).as[String].collect().toSet
     assert(h2v1 === h2v2)
+  }
+
+  test("upsert delete flags: winning, stale and absent-key deletes; no tombstone") {
+    val vl = newLake()
+    vl.upsert(spark, "silver", "del2",
+      Seq(("a", 1L, 10.0), ("b", 1L, 20.0), ("c", 5L, 30.0)).toDF("k", "ver", "v"),
+      "k", "ver")
+    val updates = Seq(
+      ("a", 2L, 0.0, true),    // delete wins (newer version) → key gone
+      ("b", 2L, 25.0, false),  // plain update
+      ("c", 1L, 0.0, true),    // STALE delete (ver 1 < current 5) → discarded
+      ("x", 1L, 0.0, true)     // delete of absent key → no-op
+    ).toDF("k", "ver", "v", "is_deleted")
+    vl.upsert(spark, "silver", "del2", updates, "k", "ver",
+      deleteCol = Some("is_deleted"))
+    val got = vl.read(spark, "silver", "del2")
+    assert(got.columns.toSet === Set("k", "ver", "v")) // flag never persists
+    val rows = got.orderBy("k").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+    assert(rows.toSeq === Seq(("b", 2L, 25.0), ("c", 5L, 30.0)))
+    // deletes leave no tombstone: a later higher-versioned insert re-creates
+    vl.upsert(spark, "silver", "del2",
+      Seq(("a", 3L, 11.0)).toDF("k", "ver", "v"), "k", "ver")
+    assert(vl.read(spark, "silver", "del2").where($"k" === "a").count() === 1)
+  }
+
+  test("upsert keeps numeric-looking string partitions ('01') verbatim") {
+    // Partition-type inference would read month=01 back as int 1; the
+    // manifest-resolved read must present the values as written.
+    val vl = newLake()
+    vl.write(Seq(("01", "a", 1L, 10.0), ("01", "b", 1L, 20.0), ("02", "c", 1L, 30.0))
+      .toDF("month", "k", "ver", "v"), "silver", "zfact", partitionCols = Seq("month"))
+    vl.upsert(spark, "silver", "zfact",
+      Seq(("01", "a", 2L, 11.0), ("01", "d", 1L, 40.0))
+        .toDF("month", "k", "ver", "v"),
+      "k", "ver", partitionCols = Seq("month"))
+    assert(vl.candidateEntries(spark, "silver", "zfact", lit(true))
+      .map(_.key).sorted === Seq("01", "02"))
+    val got = vl.read(spark, "silver", "zfact")
+    assert(got.count() === 4) // a updated in place, b kept, c untouched, d new
+    assert(got.where($"k" === "a").select("v").as[Double].head() === 11.0)
+    // no key appears twice (the duplicate-partition failure mode)
+    assert(got.groupBy("k").count().where($"count" > 1).count() === 0)
+    assert(got.select("month").distinct().as[String].collect().sorted.toSeq
+      === Seq("01", "02"))
+  }
+
+  test("mergeAggregate keeps numeric-looking string partitions ('01')") {
+    val vl = newLake()
+    vl.mergeAggregate(spark, "gold", "zagg",
+      Seq(("01", "click", 2L), ("02", "view", 3L)).toDF("hr", "typ", "n"),
+      keys = Seq("hr", "typ"), sumCols = Seq("n"), partitionCols = Seq("hr"))
+    vl.mergeAggregate(spark, "gold", "zagg",
+      Seq(("01", "click", 5L)).toDF("hr", "typ", "n"),
+      keys = Seq("hr", "typ"), sumCols = Seq("n"), partitionCols = Seq("hr"))
+    assert(vl.candidateEntries(spark, "gold", "zagg", lit(true))
+      .map(_.key).sorted === Seq("01", "02"))
+    val got = vl.read(spark, "gold", "zagg").orderBy("typ").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    // folded into hr=01, not doubled beside a re-rendered hr=1
+    assert(got.toSeq === Seq(("01", "click", 7L), ("02", "view", 3L)))
+  }
+
+  test("vacuum deletes aged orphans, never live files or young orphans") {
+    val vl = newLake()
+    vl.write(spark.range(0, 100).toDF("id").coalesce(1), "silver", "orph")
+    val t = new org.apache.hadoop.fs.Path(vl.tablePath("silver", "orph"))
+    val fs = t.getFileSystem(spark.sessionState.newHadoopConf())
+    // age the live snapshot so only the manifest reference protects it
+    val it = fs.listFiles(t, true)
+    while (it.hasNext) {
+      val f = it.next()
+      fs.setTimes(f.getPath, System.currentTimeMillis() - 3600 * 1000L, -1)
+    }
+    // plant orphans: a crashed commit attempt (old) and an in-flight one (young)
+    val oldOrphan = new org.apache.hadoop.fs.Path(t, "data/commit-crashed/part-0.parquet")
+    val youngOrphan = new org.apache.hadoop.fs.Path(t, "data/commit-inflight/part-0.parquet")
+    fs.create(oldOrphan).close()
+    fs.setTimes(oldOrphan, System.currentTimeMillis() - 3600 * 1000L, -1)
+    fs.create(youngOrphan).close()
+    val deleted = vl.vacuum(spark, "silver", "orph",
+      retainVersions = 1, olderThanMs = 60 * 1000L)
+    assert(deleted === 1)
+    assert(!fs.exists(oldOrphan))
+    assert(fs.exists(youngOrphan)) // inside the age bound → kept
+    assert(vl.read(spark, "silver", "orph").count() === 100) // data untouched
+    assert(vl.vacuum(spark, "silver", "orph", 1, 60 * 1000L) === 0) // idempotent
+    assert(vl.vacuum(spark, "silver", "absent", 1, 0L) === 0)       // missing table
   }
 
   test("delete rewrites only stats-candidate dirs; time travel keeps pre-images") {
