@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 
 /** Distributed classifier training for corpus curation — the fastText-style
@@ -241,14 +242,24 @@ object Classify {
     * separate WOE points. Zero-expected cells contribute 0 (the standard
     * convention, so all-event/all-nonevent neighbours merge first).
     *
-    * Scale shape: one percentile aggregate + one prebin-keyed aggregate
-    * do all row-scale work; the merge loop runs on the ≤`initialBins`-row
-    * collected histogram (codebook budget) with exact-long cell counts,
-    * so chi² doubles — and therefore the merge SEQUENCE — replay
-    * bit-for-bit in SQL. The exact percentile is only the DEFAULT below
-    * `maxExactRows` (it buffers the column per partial aggregate); bigger
-    * inputs auto-route the prebin thresholds to the GK sketch — see the
-    * routing note in the body. Returns one row per final bin:
+    * Scale shape: ONE per-value aggregate `(value, n, events)` does all
+    * row-scale work (the value cast to double scan-side, as the
+    * percentile and the bucket compare see it). Its row count picks the
+    * route:
+    *  - ≤ [[Splits.ExactDomainRows]] distinct values: the table is
+    *    collected once and the exact thresholds (Spark's `percentile`,
+    *    evaluated on the driver), the prebin histogram and the merge loop
+    *    all run on the driver — two jobs in all;
+    *  - larger domains: the table is pinned and both the distributed
+    *    exact thresholds ([[Splits.exactThresholdsOf]]) and the histogram
+    *    are taken from it, never from the input again.
+    * The merge loop runs on the ≤`initialBins`-row histogram (codebook
+    * budget) with exact-long cell counts, so chi² doubles — and therefore
+    * the merge SEQUENCE — replay bit-for-bit in SQL. The exact percentile
+    * is only the DEFAULT below `maxExactRows` rows (Σn of the per-value
+    * table); bigger inputs auto-route the prebin thresholds to the GK
+    * sketch over the input — see the routing note in the body. Returns
+    * one row per final bin:
     * (bin, lo_prebin, hi_prebin, n, events, event_rate).
     */
   def chiMergeBins(df: DataFrame, valueCol: String, targetCol: String,
@@ -258,37 +269,91 @@ object Classify {
     require(targetBins >= 2 && targetBins < initialBins && initialBins <= 64,
       s"need 2 <= targetBins < initialBins <= 64: $targetBins/$initialBins")
     require(maxExactRows > 0, s"maxExactRows must be positive: $maxExactRows")
-    // Prebin-threshold routing: the exact percentile buffers the whole
-    // column per partial aggregate — deterministic and oracle-matchable,
-    // but lethal on a corpus-scale column. With approxAccuracy unset, the
-    // input is probed with an EARLY-STOPPING limit scan (never a full
-    // count) and above maxExactRows the thresholds auto-route to the GK
-    // sketch (quantileBuckets' documented trade; merge algebra downstream
-    // is unchanged). Callers wanting exact on big input must say so
-    // (maxExactRows = Long.MaxValue); callers at corpus scale can pin
-    // their own accuracy via approxAccuracy.
-    val acc = approxAccuracy.orElse {
-      val cap = (maxExactRows min (Int.MaxValue - 1).toLong).toInt
-      val probe =
-        if (maxExactRows >= Int.MaxValue.toLong) 0L // un-probe-able: exact
-        // lit(1) projection: the probe only needs a row COUNT, so the
-        // scan prunes every column (parquet answers from metadata) and
-        // the global-limit gather moves 1-byte rows; selecting the value
-        // column forced a full column read through the single limit task
-        else df.select(lit(1).as("__one")).limit(cap).count()
-      if (probe >= cap && maxExactRows < Int.MaxValue.toLong) Some(10000)
-      else None
-    }
-    val pre = Splits.quantileBuckets(
-      df.select(col(valueCol), col(targetCol)), valueCol, initialBins,
-      acc)
-    var bins = pre
-      .groupBy(col("bucket").cast("int").as("__b"))
+    require(df.select(col(valueCol)).schema.head.dataType
+        .isInstanceOf[org.apache.spark.sql.types.NumericType],
+      s"chiMergeBins needs a numeric value column: $valueCol")
+    val fractions = (1 until initialBins).map(_.toDouble / initialBins)
+    // (value as double, rows, summed target); the NULL value is one row
+    val perValue = df
+      .groupBy(col(valueCol).cast("double").as("__v"))
       .agg(count(lit(1)).as("__n"),
-        sum(col(targetCol).cast("double")).cast("long").as("__e"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1).toVector // (lo, hi, n, events)
+        sum(col(targetCol).cast("double")).as("__e"))
+      .localCheckpoint(eager = false)
+    try {
+      // one job past the aggregate's shuffle: a single task reads at most
+      // ExactDomainRows + 1 rows of the table
+      val head = perValue.coalesce(1).limit(Splits.ExactDomainRows + 1)
+        .collect()
+      val local = head.length <= Splits.ExactDomainRows
+      def vOf(r: Row): Option[Double] =
+        if (r.isNullAt(0)) None else Some(r.getDouble(0))
+      // (non-NULL distinct values, rows) of a table too big to collect
+      lazy val sizes = perValue.agg(count(col("__v")), sum(col("__n"))).head()
+      val rows = if (local) head.map(_.getLong(1)).sum else sizes.getLong(1)
+      // Prebin-threshold routing: the exact percentile is deterministic and
+      // oracle-matchable, but at corpus scale its inputs are lethal. With
+      // approxAccuracy unset, inputs of maxExactRows rows or more (Σn of
+      // the per-value table, so no extra scan) auto-route the thresholds
+      // to the GK sketch over the input column (quantileBuckets'
+      // documented trade; merge algebra downstream is unchanged). Callers
+      // wanting exact on big input must say so (maxExactRows =
+      // Long.MaxValue); callers at corpus scale can pin their own accuracy
+      // via approxAccuracy.
+      val acc = approxAccuracy.orElse(
+        if (maxExactRows < Int.MaxValue.toLong && rows >= maxExactRows)
+          Some(10000)
+        else None)
+      val thresholds: Option[Array[Double]] = acc match {
+        case Some(a) =>
+          // the sketch answers in the column's type (a decimal threshold is
+          // rounded to the column's scale); widened afterwards, so the
+          // compare stays order-exact
+          Option(df.agg(percentile_approx(col(valueCol),
+              array(fractions.map(lit): _*), lit(a)).cast("array<double>"))
+            .head().getSeq[Double](0)).map(_.toArray)
+        case None if local =>
+          Splits.exactThresholdsLocal(
+            head.flatMap(r => vOf(r).map(_ -> r.getLong(1))), fractions)
+        case None =>
+          Option(Splits.exactThresholdsOf(
+              perValue.where(col("__v").isNotNull)
+                .select(col("__v"), col("__n").as("__c")),
+              sizes.getLong(0), fractions)
+            .head().getSeq[Double](0)).map(_.toArray)
+      }
+      // prebin = the count of thresholds strictly below the value under
+      // SQL double ordering; a NULL value lands in 0 and every row in -1
+      // when there is no threshold (quantileBuckets' `size(filter(..))`)
+      val hist: Seq[(Int, Long, Double)] =
+        if (local) {
+          def prebin(v: Option[Double]): Int = thresholds.fold(-1) { ths =>
+            v.fold(0)(x => ths.count(t => SQLOrderingUtil.compareDoubles(x, t) > 0))
+          }
+          head.toSeq.groupBy(r => prebin(vOf(r))).toSeq.map { case (b, rs) =>
+            (b, rs.map(_.getLong(1)).sum,
+              rs.filterNot(_.isNullAt(2)).map(_.getDouble(2)).sum)
+          }
+        } else {
+          val prebin = thresholds.fold(lit(-1))(ths =>
+            size(filter(typedLit(ths.toSeq), t => col("__v") > t)))
+          perValue.groupBy(prebin.as("__b"))
+            .agg(sum(col("__n")), coalesce(sum(col("__e")), lit(0.0)))
+            .collect().toSeq
+            .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
+        }
+      chiMergeHistogram(df.sparkSession,
+        hist.map { case (b, n, e) => (b, b, n, e.toLong) }.sortBy(_._1).toVector,
+        targetBins)
+    } finally Pinning.unpin(perValue)
+  }
+
+  /** ChiMerge's merge loop over a sorted (lo, hi, n, events) prebin
+    * histogram, down to `targetBins` bins.
+    */
+  private def chiMergeHistogram(spark: SparkSession,
+                                prebins: Vector[(Int, Int, Long, Long)],
+                                targetBins: Int): DataFrame = {
+    var bins = prebins
     def chi2(a: (Int, Int, Long, Long), b: (Int, Int, Long, Long)): Double = {
       val tot = (a._3 + b._3).toDouble
       val ev = (a._4 + b._4).toDouble; val nev = tot - ev
@@ -309,8 +374,7 @@ object Classify {
       bins = (bins.take(m) :+ ((alo, bhi, an + bn, ae + be))) ++
         bins.drop(m + 2)
     }
-    val s = df.sparkSession
-    import s.implicits._
+    import spark.implicits._
     bins.zipWithIndex.map { case ((lo, hi, n, e), i) =>
       (i, lo, hi, n, e, e.toDouble / n)
     }.toDF("bin", "lo_prebin", "hi_prebin", "n", "events", "event_rate")

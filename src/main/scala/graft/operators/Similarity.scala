@@ -255,14 +255,21 @@ object Similarity {
     val train = sampled
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      def meansOf(assigned: DataFrame): DataFrame = assigned
-        .select(col("cell0"), posexplode(col("__tv")).as(Seq("pos", "x")))
-        .groupBy("cell0", "pos").agg(avg("x").as("cx"))
-        .groupBy("cell0").agg(
-          transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-            s => s.getField("cx")).as("centroid"))
-      var current = collectCentroids(meansOf(train.withColumn("cell0",
-        pmod(xxhash64(col("__tid"), lit(seed)), lit(numCells)))))
+      // one shuffle per round: the (cell, pos) means are collected
+      // (numCells × dim rows) and each centroid is assembled on the driver
+      def meansOf(assigned: DataFrame): (Seq[Int], Seq[Seq[Double]]) = {
+        val rows = assigned
+          .select(col("cell0"), posexplode(col("__tv")).as(Seq("pos", "x")))
+          .groupBy("cell0", "pos").agg(avg("x").as("cx"))
+          .select(col("cell0").cast("int"), col("pos"), col("cx"))
+          .collect()
+          .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+          .map { case (cell, cs) =>
+            cell -> cs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq }
+        (rows.map(_._1), rows.map(_._2))
+      }
+      var current = meansOf(train.withColumn("cell0",
+        pmod(xxhash64(col("__tid"), lit(seed)), lit(numCells))))
       // `iters` full reassignment rounds after the hash-seeded init
       var i = 0
       while (i < iters) {
@@ -272,7 +279,7 @@ object Similarity {
             .nearestCells(col("__tv"), cents, ids)(0).getField("cell")
             .as("cell0"),
           col("__tv"))
-        current = collectCentroids(meansOf(assigned))
+        current = meansOf(assigned)
         i += 1
       }
       import spark.implicits._
@@ -1123,12 +1130,27 @@ object Similarity {
     * TakeOrderedAndProject argmax — never an n² recompute per round.
     * Per-round pin/unpin of the coverage carry (the pageRank discipline).
     * Ids must be unique ([[marginMining]]'s contract): a duplicated id
-    * would double-count its pair rows in every gain sum.
+    * would double-count its pair rows in every gain sum. Picks are kept
+    * as driver literals, so ids must also be of an atomic type (no
+    * arrays, structs or maps) and non-NULL; both are refused up front.
     */
   def facilityLocationSelect(df: DataFrame, idCol: String, vecCol: String,
                              k: Int, maxRows: Int = 20000): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     val spark = df.sparkSession
+    val idType = df.select(col(idCol)).schema.head.dataType
+    require(idType match {
+        case _: org.apache.spark.sql.types.NumericType |
+             _: org.apache.spark.sql.types.StringType |
+             org.apache.spark.sql.types.BinaryType |
+             org.apache.spark.sql.types.BooleanType |
+             org.apache.spark.sql.types.DateType |
+             org.apache.spark.sql.types.TimestampType |
+             org.apache.spark.sql.types.TimestampNTZType => true
+        case _ => false
+      },
+      s"facilityLocationSelect needs an atomic id type (picks are " +
+        s"matched as literals): $idCol is ${idType.simpleString}")
     val base = df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .localCheckpoint() // read by both cross-join sides + the count bound
     val n = base.limit(maxRows + 1).count()
@@ -1136,6 +1158,10 @@ object Similarity {
       s"facilityLocationSelect is an exact greedy bounded at " +
         s"maxRows=$maxRows — slice the pool or pre-select candidates " +
         s"with ivfTopK/an upstream filter.")
+    val ids = base.agg(count_distinct(col("__id")),
+      count(when(col("__id").isNull, 1))).head()
+    require(ids.getLong(1) == 0L,
+      s"facilityLocationSelect: $idCol has ${ids.getLong(1)} NULL ids")
     // every (candidate, point) cosine, computed once for all k rounds and
     // pinned ALIGNED on the point id: every round's coverage join reads it
     // on __p, so the n²-row table never re-exchanges inside the loop
@@ -1148,8 +1174,7 @@ object Similarity {
         .select(col("__c"), col("__p"),
           Vectors.cosine(col("__cv"), col("__pv")).as("__s")),
       parts, eager = false, "__p") // lazy: materializes inside round 1
-    val kEff = math.min(k.toLong,
-      base.agg(count_distinct(col("__id"))).head.getLong(0)).toInt
+    val kEff = math.min(k.toLong, ids.getLong(0)).toInt
     // The selected set is ≤ k rows and every round's argmax already
     // pulls ONE row to the driver to decide termination — so picks
     // live as driver scalars (k-bounded, the q98 seed-exemplar budget) and

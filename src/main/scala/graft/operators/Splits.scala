@@ -473,6 +473,70 @@ object Splits {
       .transform(d => hashSplit(d, "group_id", boundaries, bucket))
   }
 
+  /** Distinct-value count up to which exact thresholds come from one
+    * `percentile` over the whole per-value table; above it they are
+    * computed distributively ([[exactThresholdsOf]]).
+    */
+  private[operators] val ExactDomainRows = 65536
+
+  /** Exact `percentile(__v, fractions, __c)` thresholds over a pinned,
+    * NULL-free per-value count table `(__v, __c)` of `nDistinct` rows,
+    * with no single-task step: the running count
+    * ([[Stats.groupedCumCounts]], range-partitioned) plus one aggregate
+    * that picks the two bracketing order statistics per fraction and
+    * interpolates with Percentile.getPercentile's arithmetic replayed
+    * verbatim (position = (n−1)·p over the sorted multiset; value at
+    * rank r = least value whose running count reaches r+1;
+    * (higher−pos)·lo + (pos−lower)·hi). One row, column `__ths`.
+    */
+  private[operators] def exactThresholdsOf(counts: DataFrame, nDistinct: Long,
+                                           fractions: Seq[Double]): DataFrame = {
+    val cum = Stats.groupedCumCounts(
+      counts.select(lit(1).as("__g"), col("__v"), col("__c")), "__g",
+      pinnedCount = Some(nDistinct)) // the caller pinned and counted it
+      .withColumn("__vd", col("__v").cast("double"))
+    val thExprs = fractions.zipWithIndex.map { case (p, b) =>
+      val pos = (col("__n") - 1).cast("double") * p
+      val lower = floor(pos)
+      val higher = ceil(pos)
+      val lo = min(when(col("__cum") >= lower + 1, col("__vd")))
+      val hi = min(when(col("__cum") >= higher + 1, col("__vd")))
+      struct(first(lower, ignoreNulls = true).as("lower"),
+        first(higher, ignoreNulls = true).as("higher"),
+        first(pos, ignoreNulls = true).as("pos"),
+        lo.as("lo"), hi.as("hi")).as(s"__t$b")
+    }
+    def interp(t: Column): Column =
+      when(t.getField("higher") === t.getField("lower") ||
+        t.getField("hi") === t.getField("lo"), t.getField("lo"))
+        .otherwise(
+          (t.getField("higher") - t.getField("pos")) * t.getField("lo") +
+            (t.getField("pos") - t.getField("lower")) * t.getField("hi"))
+    cum.agg(thExprs.head, thExprs.tail: _*)
+      .select(array(fractions.indices.map(b => interp(col(s"__t$b"))): _*)
+        .as("__ths"))
+  }
+
+  /** The same exact thresholds for a per-value count table already on the
+    * driver: Spark's own `percentile` aggregate, evaluated locally over
+    * the non-NULL `(value, count)` pairs. None when there is no pair.
+    */
+  private[operators] def exactThresholdsLocal(pairs: Iterable[(Double, Long)],
+                                              fractions: Seq[Double]): Option[Array[Double]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Percentile
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+    val agg = new Percentile(BoundReference(0, DoubleType, nullable = false),
+      Literal(new GenericArrayData(fractions.toArray),
+        ArrayType(DoubleType, containsNull = false)),
+      BoundReference(1, LongType, nullable = false))
+    val buffer = agg.createAggregationBuffer()
+    pairs.foreach { case (value, n) => agg.update(buffer, InternalRow(value, n)) }
+    Option(agg.eval(buffer)).map(_.asInstanceOf[ArrayData].toDoubleArray())
+  }
+
   /** Quantile-bucketed curriculum assignment: split the corpus into
     * `numBuckets` equal-population difficulty tiers by `valueCol` (length,
     * perplexity, quality score …) — the curriculum-learning ordering key,
@@ -489,7 +553,8 @@ object Splits {
   def quantileBuckets(df: DataFrame, valueCol: String, numBuckets: Int,
                       approxAccuracy: Option[Int] = None): DataFrame = {
     require(numBuckets >= 2)
-    val ps = array((1 until numBuckets).map(b => lit(b.toDouble / numBuckets)): _*)
+    val fractions = (1 until numBuckets).map(_.toDouble / numBuckets)
+    val ps = array(fractions.map(lit): _*)
     // Column API with explicit backtick quoting, not SQL-string
     // interpolation: a bare col()/SQL reference would parse a dot in the
     // name as a struct-field path and fail to resolve (or hit a nested
@@ -509,49 +574,17 @@ object Splits {
         //  - small domains keep the single aggregate, now fed the
         //    compacted pairs through its frequency parameter — the same
         //    buffered map, built from ≤ 64k entries instead of raw rows;
-        //  - large domains compute each threshold distributively: the
-        //    running count ([[Stats.groupedCumCounts]], range-partitioned,
-        //    no single-task step) plus one aggregate that picks the two
-        //    bracketing order statistics per requested percentile and
-        //    interpolates with Percentile.getPercentile's arithmetic
-        //    replayed verbatim (position = (n−1)·p over the sorted
-        //    multiset; value at rank r = least value whose running count
-        //    reaches r+1; (higher−pos)·lo + (pos−lower)·hi).
+        //  - large domains compute each threshold distributively
+        //    ([[exactThresholdsOf]]).
         // Both routes produce bit-identical thresholds, so the routing
         // probe only affects the plan, never the result.
         val counts = df.where(v.isNotNull)
           .groupBy(v.as("__v")).agg(count(lit(1)).as("__c"))
           .localCheckpoint(eager = true)
         val nDistinct = counts.count()
-        if (nDistinct <= 65536)
+        if (nDistinct <= ExactDomainRows)
           counts.agg(percentile(col("__v"), ps, col("__c")).as("__ths"))
-        else {
-          val cum = Stats.groupedCumCounts(
-            counts.select(lit(1).as("__g"), col("__v"), col("__c")), "__g",
-            pinnedCount = Some(nDistinct)) // counts is pinned 3 lines up
-            .withColumn("__vd", col("__v").cast("double"))
-          val thExprs = (1 until numBuckets).map { b =>
-            val p = b.toDouble / numBuckets
-            val pos = (col("__n") - 1).cast("double") * p
-            val lower = floor(pos)
-            val higher = ceil(pos)
-            val lo = min(when(col("__cum") >= lower + 1, col("__vd")))
-            val hi = min(when(col("__cum") >= higher + 1, col("__vd")))
-            struct(first(lower, ignoreNulls = true).as("lower"),
-              first(higher, ignoreNulls = true).as("higher"),
-              first(pos, ignoreNulls = true).as("pos"),
-              lo.as("lo"), hi.as("hi")).as(s"__t$b")
-          }
-          def interp(t: Column): Column =
-            when(t.getField("higher") === t.getField("lower") ||
-              t.getField("hi") === t.getField("lo"), t.getField("lo"))
-              .otherwise(
-                (t.getField("higher") - t.getField("pos")) * t.getField("lo") +
-                  (t.getField("pos") - t.getField("lower")) * t.getField("hi"))
-          cum.agg(thExprs.head, thExprs.tail: _*)
-            .select(array((1 until numBuckets)
-              .map(b => interp(col(s"__t$b"))): _*).as("__ths"))
-        }
+        else exactThresholdsOf(counts, nDistinct, fractions)
     }
     df.crossJoin(broadcast(ths))
       .withColumn("bucket",

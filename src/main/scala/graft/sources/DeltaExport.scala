@@ -135,20 +135,13 @@ object DeltaExport {
     finally out.close()
     val scheme = Option(fs.getUri).map(_.getScheme).getOrElse("")
     if (scheme == "file") {
-      // POSIX rename(2) — what Hadoop's local rename compiles down to —
-      // silently CLOBBERS an existing destination, so two racing writers
-      // can both "win" the same version and one commit is lost (observed
-      // as a missing version under a two-thread append race). link(2) is
-      // the local-filesystem put-if-absent: atomic, fails if dest exists.
-      val destFile = java.nio.file.Paths.get(fs.makeQualified(dest).toUri)
+      // a rename would let two racing writers both "win" the same version
+      // (observed as a missing version under a two-thread append race)
       val tmpFile = java.nio.file.Paths.get(fs.makeQualified(tmp).toUri)
-      try {
-        java.nio.file.Files.createLink(destFile, tmpFile)
-        java.nio.file.Files.deleteIfExists(tmpFile)
-      } catch { case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmpFile)
-        throw new CommitConflict(v, table)
-      }
+      val won = VersionedLake.linkIfAbsent(
+        java.nio.file.Paths.get(fs.makeQualified(dest).toUri), tmpFile)
+      java.nio.file.Files.deleteIfExists(tmpFile)
+      if (!won) throw new CommitConflict(v, table)
     } else {
       // HDFS rename is atomic no-clobber; re-check exists() first for
       // object stores whose rename overwrites silently

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchemaShim
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -15,9 +16,21 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object Tables {
 
-  /** Parquet table scan from an sf directory (harness testdata layout). */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Parquet table scan from an sf directory (harness testdata layout).
+    * Starts no Spark job: the footer Spark's inference would read is read
+    * on the driver ([[FooterSchemaShim]]) and the scan gets that schema
+    * declared, so the result is the inferred one. Nothing is cached; every
+    * open reads its footer again. When that read fails (a missing path, a
+    * corrupt footer), Spark's own inference runs and reports it as it
+    * always did.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema =
+      try FooterSchemaShim.inferredSchema(spark.asInstanceOf[classic.SparkSession], path)
+      catch { case scala.util.control.NonFatal(_) => None }
+    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
 
   /** events `ts` normalization — the testdata's physical type has shifted
     * across vintages, so normalize every case to a session-TZ TIMESTAMP:

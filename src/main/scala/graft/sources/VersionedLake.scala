@@ -73,6 +73,17 @@ object VersionedLake {
                             entries: Seq[Entry],
                             schemaJson: Option[String] = None)
 
+  /** Put-if-absent publish on a `file:` filesystem: hard-links `tmp` to
+    * `dest` with `link(2)`, which fails atomically in the kernel when
+    * `dest` exists (POSIX rename(2), what Hadoop's local rename compiles
+    * down to, silently clobbers it). Returns false when `dest` exists; the
+    * caller removes `tmp` either way.
+    */
+  private[graft] def linkIfAbsent(dest: java.nio.file.Path,
+                                  tmp: java.nio.file.Path): Boolean =
+    try { java.nio.file.Files.createLink(dest, tmp); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+
   /** A racing writer committed the version this writer computed against.
     * Retryable by construction: recompute against the new current snapshot
     * and commit again (what [[VersionedLake.upsert]] does internally).
@@ -190,14 +201,8 @@ final case class VersionedLake(root: String) {
     val dst = manifestPath(t, version)
     val won =
       if (fs.getScheme == "file")
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(dst.toUri.getPath),
-            java.nio.file.Paths.get(tmp.toUri.getPath))
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
+        VersionedLake.linkIfAbsent(java.nio.file.Paths.get(dst.toUri.getPath),
+          java.nio.file.Paths.get(tmp.toUri.getPath))
       else fs.rename(tmp, dst)
     if (fs.getScheme == "file" || !won) fs.delete(tmp, false)
     if (!won)
@@ -223,6 +228,8 @@ final case class VersionedLake(root: String) {
     body
   }
 
+  private def newCommitDir() = s"data/commit-${java.util.UUID.randomUUID()}"
+
   /** Write `df` as a new data commit under `t/data/<uuid>/` and return the
     * manifest entries it produced. Partitioned tables write through shadow
     * string columns (`__gp_<col>`) so the real columns stay in the files;
@@ -236,9 +243,9 @@ final case class VersionedLake(root: String) {
                               collectStats: Boolean = true,
                               bloomCols: Seq[String] = Nil,
                               bloomExpectedItems: Long = 1000000L,
-                              sliceBy: Option[org.apache.spark.sql.Column] = None): Seq[Entry] = {
+                              sliceBy: Option[org.apache.spark.sql.Column] = None,
+                              rel: String = newCommitDir()): Seq[Entry] = {
     val spark = df.sparkSession
-    val rel = s"data/commit-${java.util.UUID.randomUUID()}"
     val dest = s"$t/$rel"
     // `sliceBy` adds a synthetic trailing shadow dir: several dirs PER
     // partition key (the Z-range slices of optimizeZOrder), each its own
@@ -322,7 +329,9 @@ final case class VersionedLake(root: String) {
     * type (a table column `df` lacks reads back NULL for its rows). The
     * data is written once; a lost commit race only re-reads the new
     * current manifest and re-publishes (an append commutes with whatever
-    * won). Returns the committed version.
+    * won). Returns the committed version. An append of no rows to an
+    * existing table publishes nothing (its row count comes from the new
+    * entries' stats) and returns the current version.
     */
   def append(df: DataFrame, zone: String, table: String): Int = {
     import org.apache.spark.sql.types.{DataType, StructType}
@@ -344,8 +353,14 @@ final case class VersionedLake(root: String) {
       }
       m
     }
-    val partitionCols = current().partitionCols
-    val added = writeDataCommit(t, df, partitionCols)
+    val before = current()
+    val partitionCols = before.partitionCols
+    val rel = newCommitDir()
+    val added = writeDataCommit(t, df, partitionCols, rel = rel)
+    if (before.version > 0 && added.forall(rowCount(_).contains(0L))) {
+      fsFor(spark, new Path(t)).delete(new Path(s"$t/$rel"), true)
+      return currentVersion(spark, zone, table)
+    }
     retryingCommit(5) {
       val m = current()
       require(m.partitionCols == partitionCols,
@@ -355,6 +370,29 @@ final case class VersionedLake(root: String) {
       v
     }
   }
+
+  private val RowCount = """^\{"rc":(\d+)""".r.unanchored
+
+  /** An entry's row count, from its skipping stats. */
+  private def rowCount(e: Entry): Option[Long] =
+    e.stats.collect { case RowCount(n) => n.toLong }
+
+  /** Refuses a commit whose schema gives a column of the snapshot `m`
+    * another type (nullability aside): carried data files keep the old
+    * type, so the new snapshot would no longer read. New columns pass.
+    * Driver-only: no job, no filesystem call.
+    */
+  private def requireNoRetype(m: Manifest, committed: org.apache.spark.sql.types.StructType,
+                              zone: String, table: String, op: String): Unit =
+    for (json <- m.schemaJson) {
+      val schema = org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      for (f <- committed; have <- schema.find(_.name == f.name))
+        require(org.apache.spark.sql.catalyst.types.DataTypeUtils
+            .sameType(have.dataType, f.dataType),
+          s"$op would retype $zone/$table column ${f.name} from " +
+            s"${have.dataType.simpleString} to ${f.dataType.simpleString}")
+    }
 
   /** Read a snapshot — the current one, or any retained `version` (time
     * travel). Resolves the manifest once; the returned plan touches only
@@ -861,6 +899,7 @@ final case class VersionedLake(root: String) {
       case None => winners
     }
     val result = alive.drop("__rn", "__src")
+    requireNoRetype(manifest, result.schema, zone, table, "upsert")
     // New dirs for surviving touched partitions; a fully-deleted partition
     // simply has no entry in the new manifest. Data dirs are immutable, so
     // no checkpoint pin is needed — we never overwrite what we read.
@@ -1007,22 +1046,6 @@ final case class VersionedLake(root: String) {
       v
     }
 
-  /** Change data feed: the row-level difference between two retained
-    * snapshots, keyed by `key` — Delta's CDF surface recomputed from
-    * snapshot structure instead of persisted change files.
-    *
-    * Scale path: a data dir referenced by BOTH manifests is bit-identical
-    * (dirs are immutable and carried verbatim by partition-scoped
-    * maintenance), so only dirs present in exactly one manifest are read —
-    * a one-partition upsert on a 100 TB table diffs one partition, not the
-    * table. Within the differing dirs, a full outer join on `key` labels
-    * each key `insert` / `delete` / `update_postimage` (emitted with the
-    * new row; unchanged rows are dropped by a whole-row comparison).
-    *
-    * Result: the NEW snapshot's schema plus `_change_type`, with pre-image
-    * values only implied (time-travel `read(fromVersion)` serves them) —
-    * matching Delta's `readChangeFeed` minus `update_preimage` rows.
-    */
   /** Incremental consumption cursor: the row-level changes between a
     * consumer's last-seen version and the CURRENT one, plus the new
     * cursor to persist — the polling CDC loop Delta serves with
@@ -1040,6 +1063,22 @@ final case class VersionedLake(root: String) {
     (cur, changes(spark, zone, table, key, sinceVersion, cur))
   }
 
+  /** Change data feed: the row-level difference between two retained
+    * snapshots, keyed by `key` — Delta's CDF surface recomputed from
+    * snapshot structure instead of persisted change files.
+    *
+    * Scale path: a data dir referenced by BOTH manifests is bit-identical
+    * (dirs are immutable and carried verbatim by partition-scoped
+    * maintenance), so only dirs present in exactly one manifest are read —
+    * a one-partition upsert on a 100 TB table diffs one partition, not the
+    * table. Within the differing dirs, a full outer join on `key` labels
+    * each key `insert` / `delete` / `update_postimage` (emitted with the
+    * new row; unchanged rows are dropped by a whole-row comparison).
+    *
+    * Result: the NEW snapshot's schema plus `_change_type`, with pre-image
+    * values only implied (time-travel `read(fromVersion)` serves them) —
+    * matching Delta's `readChangeFeed` minus `update_preimage` rows.
+    */
   def changes(spark: SparkSession, zone: String, table: String,
               key: String, fromVersion: Int, toVersion: Int): DataFrame = {
     require(fromVersion <= toVersion, "fromVersion must precede toVersion")
@@ -1124,6 +1163,7 @@ final case class VersionedLake(root: String) {
       .groupBy(keys.map(col): _*)
       .agg(sumCols.head -> "sum", sumCols.tail.map(_ -> "sum"): _*)
       .toDF(keys ++ sumCols: _*)
+    requireNoRetype(manifest, folded.schema, zone, table, "mergeAggregate")
     val newEntries = writeDataCommit(t, folded, partitionCols, collectStats)
     val v = cur + 1
     commitManifest(spark, t, v, partitionCols, carried ++ newEntries,

@@ -259,6 +259,99 @@ class ClassifySpec extends AnyFunSuite {
     assert(routed.map(_.getAs[Long]("n")).sum === n.toLong)
   }
 
+  /** chiMergeBins as it was before the one-aggregate rewrite, kept
+    * literally: thresholds from Spark's `percentile` (or, on the GK route,
+    * `percentile_approx`) over the raw column, each row's prebin = the
+    * thresholds strictly below it, a prebin-keyed aggregate, then the
+    * merge loop. Returns (lo_prebin, hi_prebin, n, events) per final bin.
+    */
+  private def referenceChiMerge(df: org.apache.spark.sql.DataFrame,
+                                v: String, y: String, initialBins: Int,
+                                targetBins: Int,
+                                approx: Option[Int]): Seq[(Int, Int, Long, Long)] = {
+    val ps = array((1 until initialBins).map(b =>
+      lit(b.toDouble / initialBins)): _*)
+    val ths = approx.fold(df.agg(percentile(col(v), ps).as("__ths")))(a =>
+      df.agg(percentile_approx(col(v), ps, lit(a)).as("__ths")))
+    var bins = df.crossJoin(broadcast(ths))
+      .withColumn("bucket", size(filter(col("__ths"), t => col(v) > t)))
+      .groupBy(col("bucket").cast("int").as("__b"))
+      .agg(count(lit(1)).as("__n"),
+        sum(col(y).cast("double")).cast("long").as("__e"))
+      .collect()
+      .map(r => (r.getInt(0), r.getInt(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1).toVector
+    def chi2(a: (Int, Int, Long, Long), b: (Int, Int, Long, Long)): Double = {
+      val tot = (a._3 + b._3).toDouble
+      val ev = (a._4 + b._4).toDouble; val nev = tot - ev
+      def cell(obs: Double, rowTot: Double, colTot: Double): Double = {
+        val exp = (rowTot * colTot) / tot
+        if (exp > 0) (obs - exp) * (obs - exp) / exp else 0.0
+      }
+      cell(a._4.toDouble, a._3.toDouble, ev) +
+        cell((a._3 - a._4).toDouble, a._3.toDouble, nev) +
+        cell(b._4.toDouble, b._3.toDouble, ev) +
+        cell((b._3 - b._4).toDouble, b._3.toDouble, nev)
+    }
+    while (bins.size > targetBins) {
+      val (m, _) = bins.indices.dropRight(1)
+        .map(i => i -> chi2(bins(i), bins(i + 1))).minBy { case (i, c) => (c, i) }
+      val (alo, _, an, ae) = bins(m); val (_, bhi, bn, be) = bins(m + 1)
+      bins = (bins.take(m) :+ ((alo, bhi, an + bn, ae + be))) ++ bins.drop(m + 2)
+    }
+    bins
+  }
+
+  /** `n` rows over `domain` hashed values (ties when domain < n; every
+    * tenth row draws from 100 values, so large domains tie too), ~2 %
+    * NULL values, as a double `vd` and a decimal(12,2) `vdec`, with a
+    * 0/1 target whose rate rises with the value.
+    */
+  private def chiFixture(seed: Long, n: Long, domain: Long) = {
+    val h = (salt: Long) => pmod(xxhash64(col("id"), lit(seed * 31 + salt)),
+      lit(Long.MaxValue))
+    val k = when(col("id") % 10 === 0, pmod(h(1), lit(100L)))
+      .otherwise(pmod(h(2), lit(domain)))
+    spark.range(n).select(
+      when(pmod(h(3), lit(50L)) === 0, lit(null)).otherwise(k).as("k"),
+      (pmod(h(4), lit(100L)) < lit(20.0) + pmod(h(2), lit(domain)) * 60.0 / domain)
+        .cast("int").as("y"))
+      .select((col("k") / 7.0).as("vd"),
+        (col("k") / 100).cast("decimal(12,2)").as("vdec"), col("y"))
+  }
+
+  test("chiMergeBins: equals the percentile-threshold reference on both " +
+    "domain routes and the GK route (ties, NULLs, decimals)") {
+    def check(df: org.apache.spark.sql.DataFrame, v: String,
+              maxExactRows: Long, approx: Option[Int], what: String): Unit = {
+      val got = Classify.chiMergeBins(df, v, "y", initialBins = 16,
+          targetBins = 6, maxExactRows = maxExactRows)
+        .orderBy("bin").collect()
+        .map(r => (r.getAs[Int]("lo_prebin"), r.getAs[Int]("hi_prebin"),
+          r.getAs[Long]("n"), r.getAs[Long]("events"))).toSeq
+      assert(got === referenceChiMerge(df, v, "y", 16, 6, approx), what)
+      assert(got.map(_._3).sum === df.count(), what)
+    }
+    for (seed <- 1L to 3L) {
+      val small = chiFixture(seed, 20000L, 3000L).cache()
+      for (v <- Seq("vd", "vdec")) {
+        check(small, v, 10000000L, None, s"small/$v/$seed")
+        check(small, v, 1000L, Some(10000), s"gk/$v/$seed")
+      }
+      // the small route is two jobs: the per-value aggregate's shuffle
+      // and one collect of the table
+      val (_, jobs) = JobCount.of(spark)(
+        Classify.chiMergeBins(small, "vd", "y", 16, 6))
+      assert(jobs <= 2, s"small route started $jobs jobs")
+      small.unpersist()
+    }
+    val large = chiFixture(4L, 80000L, 1000000000L).cache()
+    assert(large.where(col("vd").isNotNull).select("vd").distinct().count() >
+      65536L)
+    for (v <- Seq("vd", "vdec")) check(large, v, 10000000L, None, s"large/$v")
+    large.unpersist()
+  }
+
   test("confidentJoint: thresholds, off-diagonal catch, unconfident bucket") {
     // t0 = mean s0 over label 0 = 0.6; t1 = mean s1 over label 1 = 0.75
     val rows = Seq(

@@ -49,10 +49,35 @@ class ContractSpec extends AnyFunSuite {
     assert(dups.isEmpty, s"duplicate query numbers: $dups")
   }
 
+  /** Committed `query → max build jobs` list: the most Spark jobs a query
+    * was measured to start while its DataFrame is built. A query not
+    * listed may start none. Lower a budget (or drop the line) when a query
+    * gets lazier. A listed count is not exact from run to run: adaptive
+    * execution re-plans as stages finish, so which stage jobs a build's
+    * actions run depends on timing (q251, q77 and q115 varied by one
+    * between runs), and a listed query fails only beyond its budget plus
+    * one job plus 10 %.
+    */
+  private lazy val buildJobBudget: Map[String, Int] =
+    scala.io.Source.fromResource("build_job_budget.tsv").getLines()
+      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+      .map { l => val Array(q, n) = l.split("\\s+"); q -> n.toInt }.toMap
+
   test("queries have no duplicate output column names (parquet-writable)") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val cols = fn(spark, sf).columns
+    // Also the build-job ratchet: building a frame should run no Spark
+    // job, so each fn(spark, sf) call may start at most its budget
+    val built = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val (df, jobs) = JobCount.of(spark)(fn(spark, sf))
+      val cols = df.columns
       assert(cols.distinct.length === cols.length, s"$name: ${cols.mkString(",")}")
+      name -> jobs
     }
+    def allowed(q: String): Int =
+      buildJobBudget.get(q).fold(0)(b => b + 1 + b / 10)
+    val over = built.filter { case (q, n) => n > allowed(q) }
+    assert(over.isEmpty,
+      over.map { case (q, n) =>
+        s"$q\t$n (budget ${buildJobBudget.getOrElse(q, 0)})" }.mkString(
+        "build jobs over budget:\n", "\n", ""))
   }
 }

@@ -71,6 +71,63 @@ class SimilaritySpec extends AnyFunSuite {
   private def nbrPairs(df: org.apache.spark.sql.DataFrame) = df.collect()
     .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("nbr_id"))).toSet
 
+  /** ivfCentroids' Lloyd loop as it was with the two-aggregate meansOf
+    * (a (cell, pos) mean, then a cell-keyed collect_list only to reshape
+    * it), kept literally. Returns (cell, centroid) ascending by cell.
+    */
+  private def referenceIvfCentroids(corpus: org.apache.spark.sql.DataFrame,
+                                    idCol: String, vecCol: String,
+                                    numCells: Int, seed: Long,
+                                    iters: Int): Seq[(Int, Seq[Double])] = {
+    val train = corpus.select(col(idCol).as("__tid"), col(vecCol).as("__tv"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def meansOf(assigned: org.apache.spark.sql.DataFrame) = assigned
+      .select(col("cell0"), posexplode(col("__tv")).as(Seq("pos", "x")))
+      .groupBy("cell0", "pos").agg(avg("x").as("cx"))
+      .groupBy("cell0").agg(
+        transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
+          s => s.getField("cx")).as("centroid"))
+    def collectCentroids(c: org.apache.spark.sql.DataFrame) = {
+      val rows = c.select(col("cell0").cast("int"), col("centroid")).collect()
+        .map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1)
+      (rows.map(_._1).toSeq, rows.map(_._2.toSeq).toSeq)
+    }
+    var current = collectCentroids(meansOf(train.withColumn("cell0",
+      pmod(xxhash64(col("__tid"), lit(seed)), lit(numCells)))))
+    for (_ <- 0 until iters) {
+      val (ids, cents) = current
+      current = collectCentroids(meansOf(train.select(
+        graft.functions.expressions.VectorExpressions
+          .nearestCells(col("__tv"), cents, ids)(0).getField("cell")
+          .as("cell0"),
+        col("__tv"))))
+    }
+    train.unpersist()
+    current._1.zip(current._2)
+  }
+
+  test("ivfCentroids: bit-identical to the two-aggregate Lloyd rounds, " +
+    "with fewer jobs") {
+    val rnd = new scala.util.Random(17)
+    val emb = (1L to 400L).map(i => (i, Array.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    for ((corpus, cells, seed) <- Seq((emb, 8, 42L), (emb, 5, 7L),
+        (clustered, 4, 42L))) {
+      val (ref, refJobs) = JobCount.of(spark)(
+        referenceIvfCentroids(corpus, corpus.columns(0), "embedding", cells,
+          seed, iters = 4))
+      val (got, jobs) = JobCount.of(spark)(
+        Similarity.ivfCentroids(corpus, corpus.columns(0), "embedding", cells,
+          seed = seed).collect()
+          .map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).sortBy(_._1)
+          .toSeq)
+      def bits(cs: Seq[(Int, Seq[Double])]) =
+        cs.map { case (c, v) => c -> v.map(java.lang.Double.doubleToRawLongBits) }
+      assert(bits(got) === bits(ref), s"$cells cells, seed $seed")
+      assert(jobs < refJobs, s"$jobs jobs vs $refJobs")
+    }
+  }
+
   test("ivfTopK probing every cell equals brute force exactly") {
     val q = clustered.where(col("vec_id") % 7 === 0)
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -551,6 +608,26 @@ class SimilaritySpec extends AnyFunSuite {
       operators.Similarity.facilityLocationSelect(
         rpool, "id", "vec", k = 2, maxRows = 10)
     }
+  }
+
+  test("facilityLocationSelect: refuses non-atomic ids") {
+    import spark.implicits._
+    val pool = Seq((Seq(1, 2), Array(1.0f, 0.0f)), (Seq(3), Array(0.0f, 1.0f)))
+      .toDF("id", "vec")
+    val e = intercept[IllegalArgumentException] {
+      operators.Similarity.facilityLocationSelect(pool, "id", "vec", k = 1)
+    }
+    assert(e.getMessage.contains("atomic id type"))
+  }
+
+  test("facilityLocationSelect: refuses NULL ids") {
+    import spark.implicits._
+    val pool = Seq((Some(1L), Array(1.0f, 0.0f)), (None, Array(0.0f, 1.0f)),
+      (Some(3L), Array(0.6f, 0.8f))).toDF("id", "vec")
+    val e = intercept[IllegalArgumentException] {
+      operators.Similarity.facilityLocationSelect(pool, "id", "vec", k = 2)
+    }
+    assert(e.getMessage.contains("1 NULL ids"))
   }
 
   test("dbscan: two dense clusters, a two-cluster border takes the min " +

@@ -255,6 +255,65 @@ class VersionedLakeSpec extends AnyFunSuite {
     assert(got.toSeq === Seq(("01", "click", 7L), ("02", "view", 3L)))
   }
 
+  test("upsert and mergeAggregate refuse to retype a column: int month over " +
+    "string '01'/'02' partitions commits nothing and the table still reads") {
+    val vl = newLake()
+    vl.write(Seq(("01", "a", 1L, 10.0), ("02", "c", 1L, 30.0))
+      .toDF("month", "k", "ver", "v"), "silver", "rfact", partitionCols = Seq("month"))
+    val e = intercept[IllegalArgumentException] {
+      vl.upsert(spark, "silver", "rfact",
+        Seq((1, "a", 2L, 11.0)).toDF("month", "k", "ver", "v"),
+        "k", "ver", partitionCols = Seq("month"))
+    }
+    assert(e.getMessage.contains("retype silver/rfact column month from string to int"))
+    assert(vl.versions(spark, "silver", "rfact") === Seq(1))
+    assert(vl.read(spark, "silver", "rfact").count() === 2)
+    // a new column still evolves the schema
+    vl.upsert(spark, "silver", "rfact",
+      Seq(("01", "a", 2L, 11.0, "x")).toDF("month", "k", "ver", "v", "tag"),
+      "k", "ver", partitionCols = Seq("month"))
+    assert(vl.read(spark, "silver", "rfact").where($"k" === "a")
+      .select("tag").as[String].head() === "x")
+
+    vl.mergeAggregate(spark, "gold", "ragg",
+      Seq(("01", "click", 2L), ("02", "view", 3L)).toDF("hr", "typ", "n"),
+      keys = Seq("hr", "typ"), sumCols = Seq("n"), partitionCols = Seq("hr"))
+    val e2 = intercept[IllegalArgumentException] {
+      vl.mergeAggregate(spark, "gold", "ragg",
+        Seq((1, "click", 5L)).toDF("hr", "typ", "n"),
+        keys = Seq("hr", "typ"), sumCols = Seq("n"), partitionCols = Seq("hr"))
+    }
+    assert(e2.getMessage.contains("retype gold/ragg column hr from string to int"))
+    assert(vl.versions(spark, "gold", "ragg") === Seq(1))
+    // an int delta still folds into the long sum column (sum widens it)
+    vl.mergeAggregate(spark, "gold", "ragg",
+      Seq(("01", "click", 5)).toDF("hr", "typ", "n"),
+      keys = Seq("hr", "typ"), sumCols = Seq("n"), partitionCols = Seq("hr"))
+    assert(vl.read(spark, "gold", "ragg").where($"hr" === "01")
+      .select("n").as[Long].head() === 7L)
+  }
+
+  test("append of no rows to an existing table publishes no version") {
+    val vl = newLake()
+    def commitDirs(table: String) = new java.io.File(new java.net.URI(
+      s"${vl.tablePath("silver", table)}/data")).list().toSet
+    val rows = Seq((1L, "01", 1.0), (2L, "02", 2.0)).toDF("id", "month", "v")
+    // a new table is created even when empty (it pins the schema)
+    assert(vl.append(rows.limit(0), "silver", "e0") === 1)
+    assert(vl.append(rows, "silver", "e0") === 2)
+    val before = commitDirs("e0")
+    assert(vl.append(rows.limit(0), "silver", "e0") === 2)
+    assert(vl.versions(spark, "silver", "e0") === Seq(1, 2))
+    assert(commitDirs("e0") === before)
+    assert(vl.read(spark, "silver", "e0").count() === 2)
+    // partitioned: an empty write lays down no partition dir at all
+    vl.write(rows, "silver", "e1", partitionCols = Seq("month"))
+    val pBefore = commitDirs("e1")
+    assert(vl.append(rows.limit(0), "silver", "e1") === 1)
+    assert(vl.versions(spark, "silver", "e1") === Seq(1))
+    assert(commitDirs("e1") === pBefore)
+  }
+
   test("vacuum deletes aged orphans, never live files or young orphans") {
     val vl = newLake()
     vl.write(spark.range(0, 100).toDF("id").coalesce(1), "silver", "orph")

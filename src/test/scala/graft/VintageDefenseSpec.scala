@@ -118,4 +118,78 @@ class VintageDefenseSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("events.event_id"))
   }
+
+  /** Writes `rows` to a single parquet file with a raw parquet schema and
+    * no Spark schema metadata, as non-Spark writers (pyarrow) do.
+    */
+  private def writeRawParquet(file: String, messageType: String)(
+      rows: (org.apache.parquet.example.data.Group => Unit)*): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val mt = org.apache.parquet.schema.MessageTypeParser.parseMessageType(messageType)
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file), conf)).withType(mt).withConf(conf).build()
+    val groups = new SimpleGroupFactory(mt)
+    try rows.foreach { fill => val g = groups.newGroup(); fill(g); w.write(g) }
+    finally w.close()
+  }
+
+  test("Tables.load* start no Spark job and keep the inferred schema of every vintage") {
+    val dir = Files.createTempDirectory("vintage_open").toString
+    def events(ts: String) = s"""message events {
+      required int64 event_id; required int64 ts ($ts); required int64 user_id;
+      required binary event_type (STRING); required double value;
+      required binary props (STRING); }"""
+    def event(ts: Long)(g: org.apache.parquet.example.data.Group): Unit = {
+      g.append("event_id", 1L).append("ts", ts).append("user_id", 7L)
+        .append("event_type", "view").append("value", 1.5)
+        .append("props", "{}")
+      ()
+    }
+    val t0 = 1704103200L // 2024-01-01 10:00:00 UTC
+    // TIMESTAMP(NANOS): read as long nanos under nanosAsLong
+    new java.io.File(s"$dir/nanos").mkdirs()
+    writeRawParquet(s"$dir/nanos/events.parquet",
+      events("TIMESTAMP(NANOS,true)"))(event(t0 * 1000000000L))
+    // timestamp[us] without the UTC flag (pyarrow's naive timestamps)
+    new java.io.File(s"$dir/naive").mkdirs()
+    writeRawParquet(s"$dir/naive/events.parquet",
+      events("TIMESTAMP(MICROS,false)"))(event(t0 * 1000000L))
+    // Spark-written vintages: NTZ ts, array<double> embeddings, int ids
+    Seq((1L, "2024-01-01 10:00:00", 7L, "view", 1.5, "{}"))
+      .toDF("event_id", "ts_s", "user_id", "event_type", "value", "props")
+      .withColumn("ts", col("ts_s").cast(TimestampNTZType))
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/ntz/events.parquet")
+    Seq((1L, Seq(1.0, 0.0), 0)).toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/dbl/embeddings.parquet")
+    Seq((1, "hello world", "en", "web", 11))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/int/documents.parquet")
+
+    val tables = Seq(s"$dir/nanos" -> "events", s"$dir/naive" -> "events",
+      s"$dir/ntz" -> "events", s"$dir/dbl" -> "embeddings",
+      s"$dir/int" -> "documents")
+    for ((d, t) <- tables) {
+      val (df, jobs) = JobCount.of(spark)(Tables.load(spark, d, t))
+      assert(jobs === 0, s"$d/$t")
+      assert(df.schema === spark.read.parquet(s"$d/$t.parquet").schema, s"$d/$t")
+      val (_, loaderJobs) = JobCount.of(spark)(t match {
+        case "events" => Tables.loadEvents(spark, d)
+        case "embeddings" => Tables.loadEmbeddings(spark, d)
+        case "documents" => Tables.loadDocuments(spark, d)
+      })
+      assert(loaderJobs === 0, s"$d/$t")
+    }
+    assert(Tables.load(spark, s"$dir/nanos", "events").schema("ts").dataType
+      === LongType)
+    for (v <- Seq("nanos", "naive", "ntz")) {
+      val ev = Tables.loadEvents(spark, s"$dir/$v")
+      assert(ev.select(col("ts").cast("long")).head().getLong(0) === t0, v)
+    }
+    // a missing table fails as Spark's own read does
+    intercept[org.apache.spark.sql.AnalysisException](Tables.load(spark, dir, "absent"))
+  }
 }
