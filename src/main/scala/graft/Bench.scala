@@ -27,8 +27,10 @@ import scala.jdk.CollectionConverters._
   *     effective-cores (process-CPU seconds / wall seconds). A query whose
   *     final time is still >5x its prior is emitted under "contention"
   *     with that evidence so the judge can discount host noise vs code;
-  *   - a top-level "host" block (load average, physical cores, total GC)
-  *     timestamping the run's environment.
+  *   - a top-level "host" block (load average, the machine's cores, the
+  *     session's `local_cores`, total GC) timestamping the run's
+  *     environment; the previous mirror is a prior only when its sf
+  *     directory and `local_cores` equal this run's.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -65,23 +67,33 @@ object Bench {
         .map(_.getCollectionTime).filter(_ >= 0).sum / 1e3
 
     // Previous local mirror: priors for the third-run rule + regression diff.
+    // It is a prior only when it was taken on the same sf directory and the
+    // same local[N]: a c8 time against a c32 prior is a core-count ratio,
+    // not a regression. Otherwise this run has no prior and its artifact
+    // seeds the next one.
     val prevTimes: Map[String, Double] =
       try {
         val prev = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get("BENCH.local.json")), "UTF-8")
-        val entry = "\"(q[^\"]+)\":([-0-9.eE]+)".r
-        val base = entry.findAllMatchIn(prev.substring(prev.indexOf("\"queries\"")))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        // An unadjudicated flag (retime_runs 0) must not promote its slow
-        // sweep value to prior status: carry the flag's original prev
-        // forward, so the candidate stays on the tripwire until a re-time
-        // actually adjudicates it (r16 shipped two such flags whose slow
-        // sweeps would otherwise have silently become the comparison base).
-        val unconf = ("\"(q[^\"]+)\":\\{\"prev\":([-0-9.eE]+)," +
-          "\"now\":[-0-9.eE]+,\"retime_runs\":0,").r
-        val carried = unconf.findAllMatchIn(prev)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        base ++ carried
+        val priorSf = "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(prev).map(_.group(1))
+        val priorCores = "\"local_cores\":([0-9]+)".r.findFirstMatchIn(prev)
+          .map(_.group(1).toInt)
+        if (!priorSf.contains(sfDir) || !priorCores.contains(cpus.toInt)) Map.empty
+        else {
+          val entry = "\"(q[^\"]+)\":([-0-9.eE]+)".r
+          val base = entry.findAllMatchIn(prev.substring(prev.indexOf("\"queries\"")))
+            .map(m => m.group(1) -> m.group(2).toDouble).toMap
+          // An unadjudicated flag (retime_runs 0) must not promote its slow
+          // sweep value to prior status: carry the flag's original prev
+          // forward, so the candidate stays on the tripwire until a re-time
+          // actually adjudicates it (r16 shipped two such flags whose slow
+          // sweeps would otherwise have silently become the comparison base).
+          val unconf = ("\"(q[^\"]+)\":\\{\"prev\":([-0-9.eE]+)," +
+            "\"now\":[-0-9.eE]+,\"retime_runs\":0,").r
+          val carried = unconf.findAllMatchIn(prev)
+            .map(m => m.group(1) -> m.group(2).toDouble).toMap
+          base ++ carried
+        }
       } catch { case _: Throwable => Map.empty }
 
     // A query that throws reports -1.0 (never a fast-looking timing) and its
@@ -176,7 +188,7 @@ object Bench {
     val host = {
       val load = osBean.getSystemLoadAverage
       val cores = Runtime.getRuntime.availableProcessors
-      f"""{\"load_avg\":$load%.2f,\"cores\":$cores%d,\"gc_total_sec\":$gcSec%.1f}"""
+      f"""{\"load_avg\":$load%.2f,\"cores\":$cores%d,\"local_cores\":$cpus,\"gc_total_sec\":$gcSec%.1f}"""
     }
     // headline fields LAST: the driver keeps only the tail of long output,
     // so leading with the per-query map means a truncated capture loses

@@ -374,14 +374,25 @@ object Similarity {
       .select(col("__id"), col("e.sub").as("sub"), col("e.sv").as("sv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      def meansOf(assigned: DataFrame): DataFrame = assigned
-        .select(col("sub"), col("cell0"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy("sub", "cell0", "pos").agg(avg("x").as("cx"))
-        .groupBy("sub", "cell0").agg(
-          transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-            s => s.getField("cx")).as("centroid"))
-      var bySub = collectCodebooks(meansOf(subRows.withColumn("cell0",
-        pmod(xxhash64(col("__id"), col("sub"), lit(seed)), lit(ksub)))))
+      // one shuffle per round: the (sub, cell, pos) means are collected
+      // (ksub × dim rows) and each codebook is assembled on the driver,
+      // as ivfCentroids does
+      def meansOf(assigned: DataFrame): Seq[(Int, (Seq[Int], Seq[Seq[Double]]))] =
+        assigned
+          .select(col("sub"), col("cell0"), posexplode(col("sv")).as(Seq("pos", "x")))
+          .groupBy("sub", "cell0", "pos").agg(avg("x").as("cx"))
+          .select(col("sub").cast("int"), col("cell0").cast("int"), col("pos"),
+            col("cx"))
+          .collect()
+          .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+          .map { case (s, rows) =>
+            val cells = rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1)
+              .map { case (c, cs) =>
+                c -> cs.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq }
+            s -> ((cells.map(_._1), cells.map(_._2)))
+          }
+      var bySub = meansOf(subRows.withColumn("cell0",
+        pmod(xxhash64(col("__id"), col("sub"), lit(seed)), lit(ksub))))
       var i = 0
       while (i < iters) {
         // CaseWhen picks the row's own subspace table; untaken branches are
@@ -393,7 +404,7 @@ object Similarity {
               .cast("long"))
             .otherwise(acc)
         }
-        bySub = collectCodebooks(meansOf(subRows.withColumn("cell0", assign)))
+        bySub = meansOf(subRows.withColumn("cell0", assign))
         i += 1
       }
       localBooksDf(spark, bySub)

@@ -128,6 +128,74 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  /** pqCodebooks' Lloyd loop as it was with the two-aggregate meansOf (a
+    * (sub, cell, pos) mean, then a (sub, cell) collect_list to reshape it,
+    * collected every round), kept literally. Returns (sub, cell, centroid)
+    * ascending by sub, then cell.
+    */
+  private def referencePqCodebooks(corpus: org.apache.spark.sql.DataFrame,
+                                   idCol: String, vecCol: String, dim: Int,
+                                   numSub: Int, ksub: Int, seed: Long,
+                                   iters: Int): Seq[(Int, Int, Seq[Double])] = {
+    val d = dim / numSub
+    val subRows = corpus.select(col(idCol).as("__id"),
+        explode(array((0 until numSub).map(s =>
+          struct(lit(s).as("sub"),
+            slice(col(vecCol), s * d + 1, d).as("sv"))): _*)).as("e"))
+      .select(col("__id"), col("e.sub").as("sub"), col("e.sv").as("sv"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def meansOf(assigned: org.apache.spark.sql.DataFrame) = assigned
+      .select(col("sub"), col("cell0"), posexplode(col("sv")).as(Seq("pos", "x")))
+      .groupBy("sub", "cell0", "pos").agg(avg("x").as("cx"))
+      .groupBy("sub", "cell0").agg(
+        transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
+          s => s.getField("cx")).as("centroid"))
+    def collectCodebooks(books: org.apache.spark.sql.DataFrame) =
+      books.selectExpr("cast(sub as int) sub", "cast(cell0 as int) cell", "centroid")
+        .collect()
+        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+        .map { case (s, rows) =>
+          val sorted = rows.map(r => r.getInt(1) -> r.getSeq[Double](2).toSeq)
+            .sortBy(_._1).toSeq
+          s -> ((sorted.map(_._1), sorted.map(_._2)))
+        }
+    var bySub = collectCodebooks(meansOf(subRows.withColumn("cell0",
+      pmod(xxhash64(col("__id"), col("sub"), lit(seed)), lit(ksub)))))
+    for (_ <- 0 until iters) {
+      val assign = bySub.foldLeft(lit(-1L)) { case (acc, (s, (ids, cents))) =>
+        when(col("sub") === s,
+          graft.functions.expressions.VectorExpressions
+            .nearestCells(col("sv"), cents, ids)(0).getField("cell")
+            .cast("long"))
+          .otherwise(acc)
+      }
+      bySub = collectCodebooks(meansOf(subRows.withColumn("cell0", assign)))
+    }
+    subRows.unpersist()
+    for ((s, (ids, cents)) <- bySub; (c, v) <- ids.zip(cents)) yield (s, c, v)
+  }
+
+  test("pqCodebooks: bit-identical to the two-aggregate Lloyd rounds, " +
+    "with fewer jobs") {
+    val rnd = new scala.util.Random(23)
+    val emb = (1L to 400L).map(i => (i, Array.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    for ((numSub, ksub, seed) <- Seq((4, 8, 42L), (2, 5, 7L), (8, 4, 42L))) {
+      val (ref, refJobs) = JobCount.of(spark)(
+        referencePqCodebooks(emb, "vec_id", "embedding", 16, numSub, ksub,
+          seed, iters = 3))
+      val (got, jobs) = JobCount.of(spark)(
+        Similarity.pqCodebooks(emb, "vec_id", "embedding", dim = 16,
+          numSub = numSub, ksub = ksub, seed = seed).collect()
+          .map(r => (r.getInt(0), r.getLong(1).toInt, r.getSeq[Double](2).toSeq))
+          .sortBy(r => (r._1, r._2)).toSeq)
+      def bits(cs: Seq[(Int, Int, Seq[Double])]) =
+        cs.map { case (s, c, v) => (s, c, v.map(java.lang.Double.doubleToRawLongBits)) }
+      assert(bits(got) === bits(ref), s"$numSub subspaces × $ksub cells, seed $seed")
+      assert(jobs < refJobs, s"$jobs jobs vs $refJobs")
+    }
+  }
+
   test("ivfTopK probing every cell equals brute force exactly") {
     val q = clustered.where(col("vec_id") % 7 === 0)
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
