@@ -37,6 +37,10 @@ object Engine {
     // big fact shuffles only candidate rows — a large-join win at 100 TB
     // (pinned explicitly; the default has flipped across Spark versions).
     .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    // Delta id-mode column mapping (DeltaRead) resolves parquet columns by
+    // field id; the reader only matches by id when the requested schema
+    // carries parquet.field.id metadata, so other reads are unchanged.
+    .config("spark.sql.parquet.fieldId.read.enabled", "true")
 
   /** Cores for local sessions: the harness machine exposes 32; cap there so
     * CI-sized boxes still work. Overridable via SPARK_GRAFT_CPUS.

@@ -957,7 +957,9 @@ object Similarity {
     val scored = g.crossJoin(broadcast(s))
       .withColumn("cos", Vectors.cosine(col("__sv"), col("__tv")))
       .select("src_id", "tgt_id", "cos")
-      .localCheckpoint() // both rank directions + denominators read it
+      // both rank directions + denominators read it; lazy, so the
+      // |src|·|tgt| scoring runs with the query, not while it is built
+      .localCheckpoint(eager = false)
     val wS = Window.partitionBy("src_id")
       .orderBy(col("cos").desc, col("tgt_id"))
     val wT = Window.partitionBy("tgt_id")

@@ -41,11 +41,7 @@ object MvRewriteRule extends Rule[LogicalPlan] {
     if (conf.getConfString(EnabledKey, "false") != "true" ||
       MaterializedViews.isEmpty) plan
     else plan.transformUp {
-      case agg: Aggregate =>
-        val r = tryRewrite(agg)
-        if (sys.env.contains("GRAFT_MV_DEBUG") && r.isEmpty)
-          System.err.println(s"[mv-debug] no rewrite for:\n$agg")
-        r.getOrElse(agg)
+      case agg: Aggregate => tryRewrite(agg).getOrElse(agg)
     }
   }
 

@@ -292,7 +292,7 @@ object DeltaRead {
       val mapping = config.getOrElse("delta.columnMapping.mode", "none")
       // column mapping: 'name' mode reads via physical names from the
       // schemaString metadata; 'id' mode reads via parquet field-id
-      // matching (Spark's fieldId.read path, enabled per-scan)
+      // matching (Spark's fieldId.read path, on in Engine.configure)
       val mappingOk =
         mapping == "none" || mapping == "name" || mapping == "id"
       require(mrv <= 1 ||
@@ -518,9 +518,12 @@ object DeltaRead {
     val mapped = mode == "name" || mode == "id"
     // id mode resolves parquet columns by FIELD ID (names are arbitrary);
     // Spark's reader does exactly that when the requested schema carries
-    // parquet.field.id metadata and this conf is on
-    if (mode == "id")
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    // parquet.field.id metadata and this conf is on. Refused rather than
+    // set here: the session is the caller's (Engine.configure turns it on)
+    val fieldIdConf = org.apache.spark.sql.internal.SQLConf.PARQUET_FIELD_ID_READ_ENABLED
+    require(mode != "id" || spark.sessionState.conf.getConf(fieldIdConf),
+      s"$tablePath uses id-mode column mapping, which resolves parquet " +
+        s"columns by field id: set ${fieldIdConf.key}=true on the session")
     val physByLogical = declared.fields.map(f => f.name -> physicalName(f)).toMap
     val partPhysToLogical = snap.partitionColumns
       .map(c => physByLogical(c) -> c).toMap

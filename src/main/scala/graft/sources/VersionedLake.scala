@@ -20,11 +20,12 @@ import scala.collection.mutable.ArrayBuffer
   * }}}
   *
   * A snapshot IS a manifest file: a header naming the partition columns
-  * (and, since round 6, the snapshot's schema), then one line per
-  * `(partitionKey, dataDir)`. COMMIT = write the manifest under a temp
-  * name, then atomically publish it as `v<N>.manifest` — server-side
-  * atomic rename on HDFS/ABFS, `link(2)` create-if-absent on local
-  * filesystems (see [[commitManifest]]) — so of two racing commits for the
+  * (and, since round 6, the snapshot's schema and any streaming writers'
+  * batch watermarks), then one line per `(partitionKey, dataDir)`.
+  * COMMIT = write the manifest under a temp name, then atomically publish
+  * it as `v<N>.manifest` — server-side atomic rename on HDFS/ABFS,
+  * `link(2)` create-if-absent on local filesystems (see
+  * [[commitManifest]]) — so of two racing commits for the
   * same version exactly one wins and the loser retries against the new
   * snapshot — the same optimistic concurrency Delta gets from its commit
   * log. The CURRENT version is simply the highest manifest present; there
@@ -69,9 +70,15 @@ object VersionedLake {
                          stats: Option[String] = None,
                          bloom: Option[String] = None)
 
+  /** `txns` maps a streaming writer's appId to the last batch id it
+    * committed ([[VersionedLake.mergeAggregate]]'s `txn`, Delta's `txn`
+    * action): written by the same commit as the batch's data, so a
+    * replayed batch sees its own watermark exactly when its data landed.
+    */
   final case class Manifest(version: Int, partitionCols: Seq[String],
                             entries: Seq[Entry],
-                            schemaJson: Option[String] = None)
+                            schemaJson: Option[String] = None,
+                            txns: Map[String, Long] = Map.empty)
 
   /** Put-if-absent publish on a `file:` filesystem: hard-links `tmp` to
     * `dest` with `link(2)`, which fails atomically in the kernel when
@@ -138,13 +145,17 @@ final case class VersionedLake(root: String) {
       case "" => Nil
       case s  => s.split(",", -1).toSeq
     }
-    // Optional schema header (newer manifests): the committed snapshot's
-    // full schema, so readers never have to derive one from data files.
-    val (schemaJson, entryLines) = lines.tail.toSeq match {
-      case h +: rest if h.startsWith("schema=") =>
-        (Some(h.stripPrefix("schema=")), rest)
-      case rest => (None, rest)
-    }
+    // Optional headers: the committed snapshot's full schema, so readers
+    // never derive one from data files, then one `txn=<appId>\t<batchId>`
+    // line per streaming writer. No entry line starts with either: keys
+    // hold no raw `=` (escaped path values), an unpartitioned one is "".
+    val (header, entryLines) = lines.tail.toSeq
+      .span(l => l.startsWith("schema=") || l.startsWith("txn="))
+    val schemaJson = header.find(_.startsWith("schema=")).map(_.stripPrefix("schema="))
+    val txns = header.filter(_.startsWith("txn=")).map { l =>
+      val Array(app, batch) = l.stripPrefix("txn=").split("\t", 2)
+      app -> batch.toLong
+    }.toMap
     val entries = entryLines.map { l =>
       // Optional fields `stats=<json>` and `bloom=<relpath>` (round 6+).
       // Split them off first: the markers can't occur inside key or dir
@@ -161,7 +172,7 @@ final case class VersionedLake(root: String) {
       Entry(core.substring(0, i), core.substring(i + 1),
         field(sIdx, bIdx), field(bIdx, sIdx))
     }
-    Manifest(version, cols, entries, schemaJson)
+    Manifest(version, cols, entries, schemaJson, txns)
   }
 
   /** Atomic commit: temp write + atomic publish-if-absent. Exactly one of
@@ -181,9 +192,12 @@ final case class VersionedLake(root: String) {
                                     version: Int,
                                     partitionCols: Seq[String],
                                     entries: Seq[VersionedLake.Entry],
-                                    schemaJson: Option[String] = None): Unit = {
+                                    schemaJson: Option[String],
+                                    txns: Map[String, Long]): Unit = {
     require(partitionCols.forall(c => !c.contains(",") && !c.contains("\n")))
     require(schemaJson.forall(!_.contains("\n")), "schema JSON must be one line")
+    require(txns.keys.forall(a => !a.contains("\t") && !a.contains("\n")),
+      "txn appIds must be one tab-free line each")
     val mdir = manifestsDir(t)
     val fs = fsFor(spark, mdir)
     fs.mkdirs(mdir)
@@ -192,6 +206,7 @@ final case class VersionedLake(root: String) {
       "entry stats/bloom fields must be one tab-free line each")
     val body = (Seq(s"cols=${partitionCols.mkString(",")}") ++
       schemaJson.map(s => s"schema=$s") ++
+      txns.toSeq.sorted.map { case (app, batch) => s"txn=$app\t$batch" } ++
       entries.map(e => s"${e.key}\t${e.dir}" +
         e.stats.fold("")(s => s"\tstats=$s") +
         e.bloom.fold("")(b => s"\tbloom=$b"))).mkString("", "\n", "\n")
@@ -209,6 +224,8 @@ final case class VersionedLake(root: String) {
       throw new VersionedLake.CommitConflictException(
         s"concurrent commit lost the race for $dst — retry on the new snapshot")
   }
+
+  private val MaxCommitAttempts = 5
 
   /** Optimistic-concurrency loop: run `body` (one read-merge-commit
     * attempt); when its commit loses the rename race, recompute from the
@@ -308,17 +325,17 @@ final case class VersionedLake(root: String) {
     */
   def write(df: DataFrame, zone: String, table: String,
             partitionCols: Seq[String] = Nil,
-            maxCommitAttempts: Int = 5,
             collectStats: Boolean = true,
             bloomCols: Seq[String] = Nil,
-            bloomExpectedItems: Long = 1000000L): Int = retryingCommit(maxCommitAttempts) {
+            bloomExpectedItems: Long = 1000000L): Int = retryingCommit(MaxCommitAttempts) {
     val spark = df.sparkSession
     val t = tablePath(zone, table)
     val entries = writeDataCommit(t, df, partitionCols, collectStats,
       bloomCols, bloomExpectedItems)
-    val v = currentVersion(spark, zone, table) + 1
-    commitManifest(spark, t, v, partitionCols, entries, Some(df.schema.json))
-    v
+    val cur = currentVersion(spark, zone, table)
+    val txns = if (cur == 0) Map.empty[String, Long] else readManifest(spark, t, cur).txns
+    commitManifest(spark, t, cur + 1, partitionCols, entries, Some(df.schema.json), txns)
+    cur + 1
   }
 
   /** Append `df` as ONE snapshot commit: a new data commit whose entries
@@ -361,12 +378,12 @@ final case class VersionedLake(root: String) {
       fsFor(spark, new Path(t)).delete(new Path(s"$t/$rel"), true)
       return currentVersion(spark, zone, table)
     }
-    retryingCommit(5) {
+    retryingCommit(MaxCommitAttempts) {
       val m = current()
       require(m.partitionCols == partitionCols,
         s"$zone/$table was repartitioned by ${m.partitionCols} during the append")
       val v = m.version + 1
-      commitManifest(spark, t, v, partitionCols, m.entries ++ added, m.schemaJson)
+      commitManifest(spark, t, v, partitionCols, m.entries ++ added, m.schemaJson, m.txns)
       v
     }
   }
@@ -400,15 +417,9 @@ final case class VersionedLake(root: String) {
     */
   def read(spark: SparkSession, zone: String, table: String,
            version: Option[Int] = None): DataFrame = {
-    val t = tablePath(zone, table)
-    val v = version.getOrElse {
-      val cur = currentVersion(spark, zone, table)
-      require(cur > 0, s"no committed snapshot for $zone/$table")
-      cur
-    }
-    val m = readManifest(spark, t, v)
-    require(m.entries.nonEmpty, s"empty manifest v$v for $zone/$table")
-    readDirs(spark, t, m.entries, m.schemaJson)
+    val m = resolveManifest(spark, zone, table, version)
+    require(m.entries.nonEmpty, s"empty manifest v${m.version} for $zone/$table")
+    readDirs(spark, tablePath(zone, table), m.entries, m.schemaJson)
   }
 
   /** Read a set of manifest data dirs under the snapshot's committed
@@ -819,6 +830,34 @@ final case class VersionedLake(root: String) {
     readManifest(spark, tablePath(zone, table), v)
   }
 
+  /** The current manifest of a keyed writer ([[upsert]], [[mergeAggregate]])
+    * declaring `partitionCols`; an absent table reads as an empty one.
+    */
+  private def currentManifest(spark: SparkSession, zone: String, table: String,
+                         partitionCols: Seq[String]): Manifest = {
+    val cur = currentVersion(spark, zone, table)
+    val m =
+      if (cur == 0) Manifest(0, partitionCols, Nil)
+      else readManifest(spark, tablePath(zone, table), cur)
+    require(m.version == 0 || m.partitionCols == partitionCols,
+      s"table is partitioned by ${m.partitionCols}, not $partitionCols")
+    m
+  }
+
+  /** `m`'s entries split into those of the partitions `df` touches and
+    * those carried forward verbatim. Touched keys are canonicalized exactly
+    * like entry keys (cast-to-string, '/'-joined); driver-bounded, one row
+    * per partition.
+    */
+  private def splitTouched(m: Manifest, df: DataFrame): (Seq[Entry], Seq[Entry]) = {
+    val touched: Set[String] =
+      if (m.partitionCols.isEmpty) Set("")
+      else df
+        .select(concat_ws("/", m.partitionCols.map(c => col(c).cast("string")): _*))
+        .distinct().collect().map(_.getString(0)).toSet
+    m.entries.partition(e => touched.contains(e.key))
+  }
+
   /** Data-skipping read: resolve the snapshot, DROP every data dir whose
     * manifest stats prove it can't satisfy `predicate`, and apply the
     * predicate to what remains (skipping is an optimization — the filter
@@ -853,29 +892,13 @@ final case class VersionedLake(root: String) {
              updates: DataFrame, key: String, versionCol: String,
              deleteCol: Option[String] = None,
              partitionCols: Seq[String] = Nil,
-             maxCommitAttempts: Int = 5,
              collectStats: Boolean = true,
              bloomCols: Seq[String] = Nil,
-             bloomExpectedItems: Long = 1000000L): Int = retryingCommit(maxCommitAttempts) {
+             bloomExpectedItems: Long = 1000000L): Int = retryingCommit(MaxCommitAttempts) {
     import org.apache.spark.sql.expressions.Window
     val t = tablePath(zone, table)
-    val cur = currentVersion(spark, zone, table)
-    val manifest =
-      if (cur == 0) Manifest(0, partitionCols, Nil)
-      else readManifest(spark, t, cur)
-    require(manifest.version == 0 || manifest.partitionCols == partitionCols,
-      s"table is partitioned by ${manifest.partitionCols}, not $partitionCols")
-
-    // Touched partition keys, canonicalized exactly like entry keys
-    // (cast-to-string, '/'-joined). Driver-bounded: one row per partition.
-    val touchedKeys: Set[String] =
-      if (partitionCols.isEmpty) Set("")
-      else updates
-        .select(concat_ws("/", partitionCols.map(c => col(c).cast("string")): _*))
-        .distinct().collect().map(_.getString(0)).toSet
-    val (touchedEntries, carried) =
-      manifest.entries.partition(e => touchedKeys.contains(e.key))
-
+    val manifest = currentManifest(spark, zone, table, partitionCols)
+    val (touchedEntries, carried) = splitTouched(manifest, updates)
     val currentScoped =
       if (touchedEntries.isEmpty) None
       else Some(readDirs(spark, t, touchedEntries, manifest.schemaJson))
@@ -911,12 +934,12 @@ final case class VersionedLake(root: String) {
     val finalEntries =
       if (entries.nonEmpty) entries
       else writeDataCommit(t, result.limit(0), Nil, collectStats)
-    val v = cur + 1
+    val v = manifest.version + 1
     // result.schema is the UNION of carried and new columns (unionByName
     // allowMissingColumns), so carried dirs read back with any column this
     // batch added (NULL-padded) instead of nondeterministically dropping it.
     commitManifest(spark, t, v, partitionCols, finalEntries,
-      Some(result.schema.json))
+      Some(result.schema.json), manifest.txns)
     v
   }
 
@@ -935,38 +958,11 @@ final case class VersionedLake(root: String) {
     */
   def delete(spark: SparkSession, zone: String, table: String,
              predicate: org.apache.spark.sql.Column,
-             maxCommitAttempts: Int = 5,
              collectStats: Boolean = true,
              bloomCols: Seq[String] = Nil,
              bloomExpectedItems: Long = 1000000L): Int =
-    retryingCommit(maxCommitAttempts) {
-      val t = tablePath(zone, table)
-      val cur = currentVersion(spark, zone, table)
-      require(cur > 0, s"no committed snapshot for $zone/$table")
-      val m = readManifest(spark, t, cur)
-      require(m.entries.nonEmpty, s"empty manifest for $zone/$table")
-      val candidates = pruneEntries(spark, t, m, predicate)
-      val candidateDirs = candidates.map(_.dir).toSet
-      val carried = m.entries.filterNot(e => candidateDirs.contains(e.dir))
-      val v = cur + 1
-      if (candidates.isEmpty) {
-        // nothing can match: commit the identical entry set as the audit
-        commitManifest(spark, t, v, m.partitionCols, m.entries, m.schemaJson)
-      } else {
-        val survivors = readDirs(spark, t, candidates, m.schemaJson)
-          .where(!coalesce(predicate, lit(false)))
-        val newEntries = writeDataCommit(t, survivors, m.partitionCols,
-          collectStats, bloomCols, bloomExpectedItems)
-        val entries = carried ++ newEntries
-        // everything deleted → pin the schema with one empty dir, as upsert
-        val finalEntries =
-          if (entries.nonEmpty) entries
-          else writeDataCommit(t, survivors.limit(0), Nil, collectStats)
-        commitManifest(spark, t, v, m.partitionCols, finalEntries,
-          m.schemaJson)
-      }
-      v
-    }
+    rewriteMatching(spark, zone, table, predicate, Set.empty, collectStats,
+      bloomCols, bloomExpectedItems)(_.where(!coalesce(predicate, lit(false))))
 
   /** Predicate UPDATE committed as a new snapshot — `set` maps column
     * names to replacement expressions, applied to rows where `predicate`
@@ -986,45 +982,58 @@ final case class VersionedLake(root: String) {
   def update(spark: SparkSession, zone: String, table: String,
              predicate: org.apache.spark.sql.Column,
              set: Map[String, org.apache.spark.sql.Column],
-             maxCommitAttempts: Int = 5,
              collectStats: Boolean = true,
              bloomCols: Seq[String] = Nil,
-             bloomExpectedItems: Long = 1000000L): Int =
-    retryingCommit(maxCommitAttempts) {
-      require(set.nonEmpty, "update requires at least one assignment")
-      val t = tablePath(zone, table)
-      val cur = currentVersion(spark, zone, table)
-      require(cur > 0, s"no committed snapshot for $zone/$table")
-      val m = readManifest(spark, t, cur)
-      require(m.entries.nonEmpty, s"empty manifest for $zone/$table")
-      set.keys.foreach { c =>
-        require(!m.partitionCols.contains(c),
-          s"cannot assign partition column '$c' — delete + re-insert moves " +
-            "rows between partitions explicitly")
+             bloomExpectedItems: Long = 1000000L): Int = {
+    require(set.nonEmpty, "update requires at least one assignment")
+    rewriteMatching(spark, zone, table, predicate, set.keySet, collectStats,
+        bloomCols, bloomExpectedItems) { rows =>
+      val schema = rows.schema
+      set.keys.foreach(c => require(schema.fieldNames.contains(c),
+        s"unknown column '$c' in update assignment"))
+      val hit = coalesce(predicate, lit(false))
+      set.foldLeft(rows) { case (df, (c, expr)) =>
+        df.withColumn(c,
+          when(hit, expr.cast(schema(c).dataType)).otherwise(col(c)))
       }
-      val candidates = pruneEntries(spark, t, m, predicate)
-      val candidateDirs = candidates.map(_.dir).toSet
-      val carried = m.entries.filterNot(e => candidateDirs.contains(e.dir))
-      val v = cur + 1
-      if (candidates.isEmpty) {
-        commitManifest(spark, t, v, m.partitionCols, m.entries, m.schemaJson)
-      } else {
-        val rows = readDirs(spark, t, candidates, m.schemaJson)
-        val schema = rows.schema
-        set.keys.foreach(c => require(schema.fieldNames.contains(c),
-          s"unknown column '$c' in update assignment"))
-        val hit = coalesce(predicate, lit(false))
-        val rewritten = set.foldLeft(rows) { case (df, (c, expr)) =>
-          df.withColumn(c,
-            when(hit, expr.cast(schema(c).dataType)).otherwise(col(c)))
-        }
-        val newEntries = writeDataCommit(t, rewritten, m.partitionCols,
-          collectStats, bloomCols, bloomExpectedItems)
-        commitManifest(spark, t, v, m.partitionCols, carried ++ newEntries,
-          m.schemaJson)
-      }
-      v
     }
+  }
+
+  /** The commit shared by [[delete]] and [[update]]: the candidate dirs'
+    * rows pass through `rewrite` into one data commit, the rest carry, and
+    * a predicate that prunes every dir commits the identical entry set. A
+    * rewrite that empties the table pins its schema with one empty dir, as
+    * [[upsert]] does. `assigned` columns may not be partition columns.
+    */
+  private def rewriteMatching(spark: SparkSession, zone: String, table: String,
+                              predicate: org.apache.spark.sql.Column,
+                              assigned: Set[String], collectStats: Boolean,
+                              bloomCols: Seq[String], bloomExpectedItems: Long)(
+      rewrite: DataFrame => DataFrame): Int = retryingCommit(MaxCommitAttempts) {
+    val t = tablePath(zone, table)
+    val m = resolveManifest(spark, zone, table, None)
+    require(m.entries.nonEmpty, s"empty manifest for $zone/$table")
+    assigned.foreach { c =>
+      require(!m.partitionCols.contains(c),
+        s"cannot assign partition column '$c' — delete + re-insert moves " +
+          "rows between partitions explicitly")
+    }
+    val candidates = pruneEntries(spark, t, m, predicate)
+    val entries =
+      if (candidates.isEmpty) m.entries
+      else {
+        val dirs = candidates.map(_.dir).toSet
+        val rewritten = rewrite(readDirs(spark, t, candidates, m.schemaJson))
+        val kept = m.entries.filterNot(e => dirs.contains(e.dir)) ++
+          writeDataCommit(t, rewritten, m.partitionCols, collectStats,
+            bloomCols, bloomExpectedItems)
+        if (kept.nonEmpty) kept
+        else writeDataCommit(t, rewritten.limit(0), Nil, collectStats)
+      }
+    commitManifest(spark, t, m.version + 1, m.partitionCols, entries,
+      m.schemaJson, m.txns)
+    m.version + 1
+  }
 
   /** RESTORE: make a retained older snapshot current again by committing a
     * NEW version that references the old version's entries verbatim — the
@@ -1034,15 +1043,18 @@ final case class VersionedLake(root: String) {
     * usual first-wins manifest rename. Returns the committed version.
     */
   def restore(spark: SparkSession, zone: String, table: String,
-              toVersion: Int, maxCommitAttempts: Int = 5): Int =
-    retryingCommit(maxCommitAttempts) {
+              toVersion: Int): Int =
+    retryingCommit(MaxCommitAttempts) {
       val t = tablePath(zone, table)
       val cur = currentVersion(spark, zone, table)
       require(toVersion >= 1 && toVersion <= cur,
         s"cannot restore $zone/$table to v$toVersion (current v$cur)")
       val m = readManifest(spark, t, toVersion)
       val v = cur + 1
-      commitManifest(spark, t, v, m.partitionCols, m.entries, m.schemaJson)
+      // a restore rolls back data, not the record of which batches the
+      // writers committed: the current watermarks stay
+      commitManifest(spark, t, v, m.partitionCols, m.entries, m.schemaJson,
+        readManifest(spark, t, cur).txns)
       v
     }
 
@@ -1132,43 +1144,44 @@ final case class VersionedLake(root: String) {
   /** Additive gold-table fold, partition-scoped like [[upsert]]: only the
     * partitions present in `delta` are read, re-summed, and re-written;
     * the rest carry forward. `partitionCols` must be group keys.
+    *
+    * `txn = (appId, batchId)` identifies a streaming write, as on
+    * [[DeltaExport.append]]: the commit records `batchId` as `appId`'s
+    * watermark, and a batch at or below that watermark — a replay of a
+    * fold that already committed — returns the current version without
+    * committing. Checked on every commit attempt, so a racing commit of
+    * the same batch is seen too. Returns the committed version.
     */
   def mergeAggregate(spark: SparkSession, zone: String, table: String,
                      delta: DataFrame, keys: Seq[String],
                      sumCols: Seq[String],
                      partitionCols: Seq[String] = Nil,
-                     maxCommitAttempts: Int = 5,
-                     collectStats: Boolean = true): Int = retryingCommit(maxCommitAttempts) {
+                     collectStats: Boolean = true,
+                     txn: Option[(String, Long)] = None): Int = retryingCommit(MaxCommitAttempts) {
     require(partitionCols.forall(keys.contains),
       "partitionCols must be group keys, or groups would span partitions")
     val t = tablePath(zone, table)
-    val cur = currentVersion(spark, zone, table)
-    val manifest =
-      if (cur == 0) Manifest(0, partitionCols, Nil)
-      else readManifest(spark, t, cur)
-    require(manifest.version == 0 || manifest.partitionCols == partitionCols,
-      s"table is partitioned by ${manifest.partitionCols}, not $partitionCols")
-    val touchedKeys: Set[String] =
-      if (partitionCols.isEmpty) Set("")
-      else delta
-        .select(concat_ws("/", partitionCols.map(c => col(c).cast("string")): _*))
-        .distinct().collect().map(_.getString(0)).toSet
-    val (touchedEntries, carried) =
-      manifest.entries.partition(e => touchedKeys.contains(e.key))
-    val combined = touchedEntries match {
-      case Seq() => delta
-      case es => readDirs(spark, t, es, manifest.schemaJson).unionByName(delta)
+    val manifest = currentManifest(spark, zone, table, partitionCols)
+    val replayed = txn.exists { case (app, batch) =>
+      manifest.txns.get(app).exists(batch <= _) }
+    if (replayed) manifest.version
+    else {
+      val (touchedEntries, carried) = splitTouched(manifest, delta)
+      val combined = touchedEntries match {
+        case Seq() => delta
+        case es => readDirs(spark, t, es, manifest.schemaJson).unionByName(delta)
+      }
+      val folded = combined
+        .groupBy(keys.map(col): _*)
+        .agg(sumCols.head -> "sum", sumCols.tail.map(_ -> "sum"): _*)
+        .toDF(keys ++ sumCols: _*)
+      requireNoRetype(manifest, folded.schema, zone, table, "mergeAggregate")
+      val newEntries = writeDataCommit(t, folded, partitionCols, collectStats)
+      val v = manifest.version + 1
+      commitManifest(spark, t, v, partitionCols, carried ++ newEntries,
+        Some(folded.schema.json), manifest.txns ++ txn)
+      v
     }
-    val folded = combined
-      .groupBy(keys.map(col): _*)
-      .agg(sumCols.head -> "sum", sumCols.tail.map(_ -> "sum"): _*)
-      .toDF(keys ++ sumCols: _*)
-    requireNoRetype(manifest, folded.schema, zone, table, "mergeAggregate")
-    val newEntries = writeDataCommit(t, folded, partitionCols, collectStats)
-    val v = cur + 1
-    commitManifest(spark, t, v, partitionCols, carried ++ newEntries,
-      Some(folded.schema.json))
-    v
   }
 
   /** Compaction as a snapshot commit: rewrite the current data into at most
@@ -1185,14 +1198,11 @@ final case class VersionedLake(root: String) {
               filesPerPartition: Int,
               collectStats: Boolean = true,
               bloomCols: Seq[String] = Nil,
-              bloomExpectedItems: Long = 1000000L,
-              maxCommitAttempts: Int = 5): Int =
-      retryingCommit(maxCommitAttempts) {
+              bloomExpectedItems: Long = 1000000L): Int =
+      retryingCommit(MaxCommitAttempts) {
     require(filesPerPartition > 0)
     val t = tablePath(zone, table)
-    val cur = currentVersion(spark, zone, table)
-    require(cur > 0, s"no committed snapshot for $zone/$table")
-    val m = readManifest(spark, t, cur)
+    val m = resolveManifest(spark, zone, table, None)
     val df = read(spark, zone, table)
     val sized =
       if (m.partitionCols.isEmpty) df.repartition(filesPerPartition)
@@ -1210,9 +1220,9 @@ final case class VersionedLake(root: String) {
       }
     val entries = writeDataCommit(t, sized, m.partitionCols, collectStats,
       bloomCols, bloomExpectedItems)
-    val v = cur + 1
+    val v = m.version + 1
     commitManifest(spark, t, v, m.partitionCols, entries,
-      Some(df.schema.json))
+      Some(df.schema.json), m.txns)
     v
   } // retryingCommit: a compact losing to a concurrent writer re-reads
     // the new snapshot and re-compacts — maintenance never crashes a race
@@ -1239,14 +1249,11 @@ final case class VersionedLake(root: String) {
                      bitsPerCol: Int = 4, sampleFraction: Double = 1.0,
                      collectStats: Boolean = true,
                      bloomCols: Seq[String] = Nil,
-                     bloomExpectedItems: Long = 1000000L,
-                     maxCommitAttempts: Int = 5): Int =
-      retryingCommit(maxCommitAttempts) {
+                     bloomExpectedItems: Long = 1000000L): Int =
+      retryingCommit(MaxCommitAttempts) {
     require(zCols.nonEmpty && slicesPerPartition >= 1)
     val t = tablePath(zone, table)
-    val cur = currentVersion(spark, zone, table)
-    require(cur > 0, s"no committed snapshot for $zone/$table")
-    val m = readManifest(spark, t, cur)
+    val m = resolveManifest(spark, zone, table, None)
     require(zCols.forall(c => !m.partitionCols.contains(c)),
       "z-order columns must not be partition columns (constant per dir)")
     val df = read(spark, zone, table)
@@ -1269,8 +1276,9 @@ final case class VersionedLake(root: String) {
       .sortWithinPartitions(m.partitionCols.map(col) :+ zkey: _*)
     val entries = writeDataCommit(t, arranged, m.partitionCols, collectStats,
       bloomCols, bloomExpectedItems, sliceBy = Some(sliceCol))
-    val v = cur + 1
-    commitManifest(spark, t, v, m.partitionCols, entries, Some(df.schema.json))
+    val v = m.version + 1
+    commitManifest(spark, t, v, m.partitionCols, entries, Some(df.schema.json),
+      m.txns)
     v
   } // retryingCommit: same maintenance-race rule as compact
 

@@ -62,11 +62,18 @@ object DocStreams {
       }
       .start()
 
+  /** Commits between compactions of [[nearDupCurateToLake]]'s key table:
+    * each micro-batch appends one small data dir, and the screen pays one
+    * file open per dir it reads.
+    */
+  private val KeyCompactEvery = 64
+
   /** NEAR-dup curating ingest — [[curateToLake]]'s screen upgraded from
     * exact fingerprints to banded MinHash against a PRECOMPUTED corpus-key
-    * artifact ([[graft.operators.Incremental.bandedKeys]], read from
-    * `corpusKeysPath`): the 100 TB ingest shape where the standing corpus
-    * is never re-shingled per batch. Per micro-batch:
+    * table ([[graft.operators.Incremental.bandedKeys]] rows in `lake`'s
+    * `zone/keysTable`; seed it with `lake.write(bandedKeys(...), zone,
+    * keysTable)`): the 100 TB ingest shape where the standing corpus is
+    * never re-shingled per batch. Per micro-batch:
     *
     *  1. batch docs screen against the stored corpus keys
     *     ([[graft.operators.Incremental.minhashNewDocs]] — band collision
@@ -82,18 +89,16 @@ object DocStreams {
     *     what makes replay idempotent for docs the band keys cannot see;
     *  4. the new docs append to the lake as one snapshot commit (with
     *     `fp` persisted), THEN the near-dup survivors' band keys append to
-    *     the plain-parquet corpus-key artifact,
-    *     so the NEXT batch screens against them — the artifact grows
-    *     incrementally, no corpus rescan ever;
-    *  5. every `compactEveryBatches` micro-batches (default 64; 0
-    *     disables) the key artifact compacts via [[compactCorpusKeys]] —
-    *     without this a long-lived stream accretes one small file per
-    *     batch and the screen pays one file open per historical batch.
-    *     Serial micro-batches make the in-stream swap safe; an
-    *     interrupted swap rolls FORWARD at the next batch.
+    *     the key table as another, so the NEXT batch screens against them
+    *     — the keys grow incrementally, no corpus rescan ever;
+    *  5. every [[KeyCompactEvery]] key-table commits, the key table
+    *     compacts ([[graft.sources.VersionedLake.compact]]) — a snapshot
+    *     commit that keeps every row, so the screen reads the same bag of
+    *     keys from fewer files. A compaction racing another writer loses
+    *     the manifest race and retries on the new snapshot.
     *
     * Replay safety, case by case (the lake commit and the key append are
-    * two separate writes, so every crash window between them must be
+    * two separate commits, so every crash window between them must be
     * idempotent):
     *
     *  - full replay (checkpoint lost): normal-length docs collide with
@@ -111,31 +116,20 @@ object DocStreams {
     */
   def nearDupCurateToLake(docs: DataFrame, lake: graft.sources.VersionedLake,
                           zone: String, table: String,
-                          corpusKeysPath: String, checkpoint: String,
+                          keysTable: String, checkpoint: String,
                           shingleSize: Int = 3, numHashes: Int = 16,
                           bands: Int = 4, maxCorpusBucket: Int = 4096,
-                          expectedItems: Long = 1L << 20,
-                          compactEveryBatches: Int = 64):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    require(compactEveryBatches >= 0,
-      s"compactEveryBatches must be ≥ 0 (0 disables): $compactEveryBatches")
+                          expectedItems: Long = 1L << 20):
+      org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        val conf = spark.sessionState.newHadoopConf()
-        val kp = new org.apache.hadoop.fs.Path(corpusKeysPath)
-        // roll forward an interrupted compaction swap before reading:
-        // without this, a crash between the swap's two renames would make
-        // the next batch see "no keys" and silently lose the screen
-        recoverKeySwap(kp.getFileSystem(conf), corpusKeysPath)
-        val keysExist = kp.getFileSystem(conf).exists(kp)
         val screened =
-          if (!keysExist) batch.toDF()
+          if (lake.currentVersion(spark, zone, keysTable) == 0) batch.toDF()
           else graft.operators.Incremental.minhashNewDocsAgainstKeys(
-            batch.toDF(), spark.read.parquet(corpusKeysPath), "doc_id",
+            batch.toDF(), lake.read(spark, zone, keysTable), "doc_id",
             "text", shingleSize, numHashes, bands, maxCorpusBucket)
         // batch-local near-dup (keep each cluster's min id), then exact
         // fingerprint collapse — the only pass that sees sub-shingle copies
@@ -147,7 +141,8 @@ object DocStreams {
             graft.operators.Dedup.fingerprintKeepIds(nearKept, "doc_id",
               "text").select("doc_id"),
             Seq("doc_id"), "left_semi")
-          // pinned: the screen reads the key artifact appended to below
+          // pinned: the doc append and the key append both read it, and
+          // re-running the screen for the second costs ~1.5× per batch
           .localCheckpoint()
         val newToLake =
           if (lake.currentVersion(spark, zone, table) == 0) survivors
@@ -157,65 +152,10 @@ object DocStreams {
         // keys derive from the near-dup SURVIVORS (not newToLake): in the
         // crash-after-lake-append window the replayed docs are fp-dropped
         // from the lake append but their band keys still have to land
-        graft.operators.Incremental.bandedKeys(survivors, "doc_id", "text",
-            shingleSize, numHashes, bands)
-          .write.mode("append").parquet(corpusKeysPath)
-        // every-N-batches maintenance: each micro-batch appends one small
-        // key file, so a long-lived stream's screen would pay one file
-        // open per historical batch. Compacting INSIDE foreachBatch is
-        // safe — micro-batches are serial, so nothing else appends — and
-        // a crash mid-swap rolls forward at the next batch (above). A
-        // replayed batch may compact twice; compaction is idempotent
-        // (distinct() of a bag is stable).
-        if (compactEveryBatches > 0 &&
-            batchId % compactEveryBatches == compactEveryBatches - 1) {
-          compactCorpusKeys(spark, corpusKeysPath)
-          ()
-        }
+        val v = lake.append(graft.operators.Incremental.bandedKeys(survivors,
+          "doc_id", "text", shingleSize, numHashes, bands), zone, keysTable)
+        if (v % KeyCompactEvery == 0)
+          lake.compact(spark, zone, keysTable, filesPerPartition = 1): Unit
       }
       .start()
-  }
-
-  /** Compact the corpus-key artifact a long-running
-    * [[nearDupCurateToLake]] stream grows: each micro-batch appends one
-    * small parquet file, and after 10⁴ batches the screen's scan pays
-    * 10⁴ file opens for a few MB of keys. Compaction is read → exact-row
-    * `distinct()` → coalesce(targetFiles) → write to a sibling temp dir →
-    * two-rename swap, old directory deleted last.
-    *
-    * Screen-identity argument: the artifact is a bag of (id, band, bk)
-    * rows and every consumer ([[graft.operators.Incremental
-    * .minhashNewDocsAgainstKeys]] → `minhashIngestMatches`) computes
-    * bucket counts and member joins from those rows — `distinct()` can
-    * only remove EXACT row duplicates (same doc, same band, same key),
-    * which are replay/crash artifacts, never two legitimate docs (their
-    * `id` differs). So results are identical pre/post compaction;
-    * StreamingSpec asserts it end to end.
-    *
-    * Safe to call from INSIDE the owning stream's `foreachBatch` (the
-    * [[nearDupCurateToLake]] `compactEveryBatches` hook does): micro-
-    * batches of one stream run serially, so no concurrent append exists
-    * within the callback. Only compaction from OUTSIDE a running stream
-    * races its appends — run that variant while the stream is STOPPED.
-    * A crash mid-swap is recovered on the next call (and by the stream
-    * itself): the temp directory is a COMPLETE materialized write before
-    * any rename, so a missing live dir with a complete temp rolls
-    * FORWARD. Returns the compacted row count.
-    */
-  def compactCorpusKeys(spark: SparkSession, corpusKeysPath: String,
-                        targetFiles: Int = 1): Long =
-    Maintenance.compactParquetDir(spark, corpusKeysPath, targetFiles)
-
-  /** Roll an interrupted [[compactCorpusKeys]] swap FORWARD: the only
-    * crash window that leaves the live directory missing is after the
-    * live→old rename and before the tmp→live rename — at which point the
-    * temp directory is a complete, committed parquet write (it is fully
-    * written BEFORE the first rename), so renaming it into place finishes
-    * the compaction the crash interrupted. Every other window leaves the
-    * live directory intact and at worst some leftover temp/old debris,
-    * which the next compaction clears. No-op when the live dir exists.
-    */
-  private def recoverKeySwap(fs: org.apache.hadoop.fs.FileSystem,
-                             corpusKeysPath: String): Unit =
-    Maintenance.recoverSwap(fs, corpusKeysPath)
 }

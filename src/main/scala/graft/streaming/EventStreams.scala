@@ -213,41 +213,30 @@ object EventStreams {
     * the moment the cumulative evidence crosses ln(1/α), not at a
     * scheduled readout ([[graft.operators.EventAnalytics
     * .alwaysValidMonitor]]'s arithmetic, cumulated across batches).
-    * Per micro-batch: the batch's four conversion cells append to
-    * `outDir/state` (one tiny row per batch), the cumulative cells
-    * recompute over the state table, and one monitor row (batch_id,
-    * counts, rates, diff, log_e_value, can_stop) appends to
-    * `outDir/monitor`.
+    * Per micro-batch: the batch's four conversion cells upsert on
+    * `batch_id` into the [[graft.sources.VersionedLake]] table
+    * `state/cells` under `outDir`, the cumulative cells recompute over
+    * that snapshot, and one monitor row (batch_id, counts, rates, diff,
+    * log_e_value, can_stop) appends to `outDir/monitor`.
     *
-    * Replay safety: a SAME-CHECKPOINT replay re-derives IDENTICAL cells
-    * from the same micro-batch data, and the state read collapses
-    * duplicates per batch_id as WHOLE ROWS (the struct minimum — one
-    * consistent (na,nb,ca,cb) tuple per batch id, cells never mixed
-    * across rows) — so cumulative counts never double-count. A restart
-    * with a DIFFERENT checkpoint may assign events to batch ids
-    * differently; the whole-row dedup still picks one coherent tuple
-    * per id (no cell mixing), but events straddling the old and new
-    * batch boundaries can be counted in two different ids' tuples —
-    * exact cumulative replay assumes same-checkpoint replay (point the
-    * restart at the same checkpoint dir, or a fresh outDir). The
-    * monitor may carry a duplicate row per replayed batch id with
-    * identical content (dedup downstream by batch_id). State and
-    * monitor are batch-count-sized — nothing event-scale is ever
-    * re-read — and every `compactEveryBatches` micro-batches (default
-    * 64; 0 disables) the state directory compacts to one file via
-    * [[Maintenance.compactParquetDir]]'s two-rename swap, so a
-    * months-long monitor never pays one file open per historical batch;
-    * an interrupted swap rolls FORWARD at the next batch.
+    * Replay safety: a replayed batch id REPLACES its own row (the
+    * incoming row wins the `batch_id` tie), so cumulative counts never
+    * double-count, and a SAME-CHECKPOINT replay rewrites identical cells.
+    * A restart with a DIFFERENT checkpoint may assign events to batch ids
+    * differently, so exact cumulative replay assumes same-checkpoint
+    * replay (or a fresh outDir). The monitor may carry a duplicate row
+    * per replayed batch id with identical content (dedup downstream by
+    * batch_id). Each upsert rewrites the one unpartitioned data dir, so
+    * the state stays one dir of batch-count-sized rows — nothing
+    * event-scale is ever re-read.
     */
   def abMonitorSink(events: DataFrame, armACol: Column, convCol: Column,
                     outDir: String, checkpoint: String,
-                    tau: Double = 1e-4, alpha: Double = 0.05,
-                    compactEveryBatches: Int = 64):
+                    tau: Double = 1e-4, alpha: Double = 0.05):
       org.apache.spark.sql.streaming.StreamingQuery = {
     require(tau > 0, s"tau must be positive: $tau")
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1): $alpha")
-    require(compactEveryBatches >= 0,
-      s"compactEveryBatches must be ≥ 0 (0 disables): $compactEveryBatches")
+    val state = graft.sources.VersionedLake(outDir)
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -255,32 +244,18 @@ object EventStreams {
                        id: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          val statePath = s"$outDir/state"
-          // roll forward an interrupted compaction swap BEFORE appending:
-          // an append that recreates a missing live dir would strand the
-          // completed temp and silently drop all prior state
-          Maintenance.recoverSwap(
-            new org.apache.hadoop.fs.Path(statePath)
-              .getFileSystem(spark.sessionState.newHadoopConf()),
-            statePath)
           val conv = when(convCol, 1L).otherwise(0L)
-          batch.toDF().agg(
+          val cells = batch.toDF().agg(
               sum(when(armACol, 1L).otherwise(0L)).as("na"),
               sum(when(!armACol, 1L).otherwise(0L)).as("nb"),
               sum(when(armACol, conv).otherwise(0L)).as("ca"),
               sum(when(!armACol, conv).otherwise(0L)).as("cb"))
             .withColumn("batch_id", lit(id))
-            .write.mode("append").parquet(statePath)
-          // whole-row dedup per batch_id: one consistent tuple, never a
-          // per-cell max across rows from different batch groupings
-          val st = spark.read.parquet(statePath)
-            .groupBy("batch_id")
-            .agg(min(struct(col("na"), col("nb"), col("ca"), col("cb")))
-              .as("__s"))
-            .select(col("__s.na").as("na"), col("__s.nb").as("nb"),
-              col("__s.ca").as("ca"), col("__s.cb").as("cb"))
-          val cum = st.agg(sum("na").as("n_a"), sum("nb").as("n_b"),
-            sum("ca").as("conv_a"), sum("cb").as("conv_b"))
+          state.upsert(spark, "state", "cells", cells,
+            key = "batch_id", versionCol = "batch_id")
+          val cum = state.read(spark, "state", "cells")
+            .agg(sum("na").as("n_a"), sum("nb").as("n_b"),
+              sum("ca").as("conv_a"), sum("cb").as("conv_b"))
           val na = col("n_a").cast("double")
           val nb = col("n_b").cast("double")
           val pa = col("conv_a") / na
@@ -304,14 +279,6 @@ object EventStreams {
             .select("batch_id", "n_a", "n_b", "conv_a", "conv_b",
               "p_a", "p_b", "diff", "log_e_value", "can_stop")
             .write.mode("append").parquet(s"$outDir/monitor")
-          // every-N-batches maintenance: each micro-batch appends one
-          // tiny state file; compacting INSIDE foreachBatch is safe
-          // (micro-batches are serial) and idempotent on replay
-          if (compactEveryBatches > 0 &&
-              id % compactEveryBatches == compactEveryBatches - 1) {
-            Maintenance.compactParquetDir(spark, statePath)
-            ()
-          }
         }
       }
       .start()
@@ -327,10 +294,9 @@ object EventStreams {
     * reads the manifest-resolved snapshot, so it never sees the dirs its
     * own append writes.
     *
-    * Replay is key-idempotent WITHOUT a marker: a re-delivered batch's
+    * Replay is key-idempotent WITHOUT a watermark: a re-delivered batch's
     * keys are already in the table, so the filter drops them — unlike the
-    * additive fold in [[hourlyGoldToLake]], which needs the batch-id
-    * marker.
+    * additive fold in [[hourlyGoldToLake]], which needs one.
     *
     * The sketch is rebuilt from the standing table each batch (simple and
     * correct); a long-running deployment caches it and refreshes on corpus
@@ -365,18 +331,13 @@ object EventStreams {
     *
     * foreachBatch is AT-LEAST-once: after a crash between the fold and the
     * checkpoint commit, the same batch replays — and an additive fold is
-    * not idempotent. A last-applied-batch-id marker next to the table makes
-    * the replay a no-op (batch ids are monotonic, and only the most recent
-    * batch can replay).
-    *
-    * RESIDUAL WINDOW — the marker narrows, but does not close, the
-    * double-fold hazard: a crash after the `mergeAggregate` commit but
-    * before the marker write leaves the fold applied with a stale marker,
-    * so the replayed batch folds twice. The fold is one atomic snapshot
-    * commit, but the marker is a separate file; on Delta/Iceberg the fix
-    * is exact — record `batchId` in the same commit as the MERGE (e.g.
-    * `txnAppId`/`txnVersion`) and the replay check becomes transactional
-    * with the data.
+    * not idempotent. So the fold carries `(queryId, batchId)` as its
+    * `txn`, and the manifest commit that publishes the folded rows also
+    * records the batch as this query's watermark: a replay finds its own
+    * watermark exactly when its fold landed, and skips. The query id is
+    * persisted in the checkpoint, so a restart on the same checkpoint is
+    * the same writer, and a new checkpoint is a new writer whose batch ids
+    * start afresh.
     */
   def hourlyGoldToLake(events: DataFrame, lake: graft.sources.VersionedLake,
                        zone: String, table: String, checkpoint: String):
@@ -386,29 +347,19 @@ object EventStreams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val marker = new org.apache.hadoop.fs.Path(
-          lake.tablePath(zone, table) + "._applied_batch")
-        val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-        val lastApplied =
-          if (fs.exists(marker)) {
-            val in = fs.open(marker)
-            try new String(in.readAllBytes(),
-              java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-            finally in.close()
-          } else -1L
-        if (batchId > lastApplied) {
-          val delta = batch
-            .groupBy(date_trunc("hour", col("ts")).as("hour_start"),
-              col("event_type"))
-            .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
-          lake.mergeAggregate(spark, zone, table, delta,
-            keys = Seq("hour_start", "event_type"),
-            sumCols = Seq("n", "total_value"))
-          val out = fs.create(marker, true)
-          try out.write(batchId.toString
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-        }
+        val queryId = spark.sparkContext.getLocalProperty(
+          org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY)
+        require(queryId != null,
+          "hourlyGoldToLake: no streaming query id on the batch thread, so " +
+            "a replayed batch could not be told from a new one")
+        val delta = batch
+          .groupBy(date_trunc("hour", col("ts")).as("hour_start"),
+            col("event_type"))
+          .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
+        lake.mergeAggregate(spark, zone, table, delta,
+          keys = Seq("hour_start", "event_type"),
+          sumCols = Seq("n", "total_value"),
+          txn = Some(queryId -> batchId)): Unit
       }
       .start()
 

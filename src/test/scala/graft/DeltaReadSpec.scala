@@ -485,6 +485,14 @@ class DeltaReadSpec extends AnyFunSuite {
     assert(rowId.getString(1) === "idm")
     assert(rowId.getStruct(2).getLong(0) === 77L,
       "nested field must resolve by parquet field id")
+    // the read never flips the caller's session: with field-id reads off
+    // it refuses, naming the conf, and leaves the conf as it was
+    val fieldIdKey = "spark.sql.parquet.fieldId.read.enabled"
+    val off = spark.newSession()
+    off.conf.set(fieldIdKey, "false")
+    val refused = intercept[IllegalArgumentException](DeltaRead.read(off, dir2))
+    assert(refused.getMessage.contains(fieldIdKey))
+    assert(off.conf.get(fieldIdKey) === "false")
   }
 
   test("schema evolution: latest metaData wins, pre-evolution files null-pad") {

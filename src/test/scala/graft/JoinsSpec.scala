@@ -29,6 +29,26 @@ class JoinsSpec extends AnyFunSuite {
     assert(got === Map(1L -> 10.0, 2L -> 11.0, 4L -> 20.0))
   }
 
+  test("asOfJoin: with keys ≈ rows the per-(partition, key) boundary " +
+    "summary plans no broadcast") {
+    // broadcasts only on an explicit hint in this session: the boundary
+    // summary is one row per (range partition, key), data-sized here
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val left = s2.range(2000).select(col("id").as("k"),
+      timestamp_seconds(col("id") + 10).as("lts"))
+    val right = s2.range(4000).select((col("id") % 2000).as("k"),
+      timestamp_seconds(col("id") % 2000 + (col("id") / 2000).cast("long") * 5)
+        .as("rts"), col("id").as("v"))
+    val out = Joins.asOfJoin(left, right, "k", "lts", "rts", Seq("v"))
+    val got = out.collect() // runs out's own plan
+    // every left row matches the later of its key's two right rows
+    assert(got.length === 2000)
+    assert(got.forall(r => r.getAs[Long]("asof_v") === r.getAs[Long]("k") + 2000))
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastExchange"), plan)
+  }
+
   test("asOfJoin: toleranceSec bounds the look-back at microsecond precision") {
     val trades = Seq(
       (1L, 100L, ts("2021-01-01 10:00:05")),   // 5s after the quote → kept

@@ -164,6 +164,28 @@ class SplitsSpec extends AnyFunSuite {
     assert(folds.forall(f => f._2 % 2 === 0 && f._3 % 2 === 0))
   }
 
+  test("expandingTimeFolds: with distinct ts ≈ N no single-partition " +
+    "exchange carries the timestamps") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val n = 20000
+    val rows = spark.range(n).select(timestamp_seconds(col("id")).as("ts"))
+    val out = Splits.expandingTimeFolds(rows, "ts", k = 4)
+    val folds = out.collect().sortBy(_.getLong(0)) // runs out's own plan
+    assert(folds.length === 4)
+    assert(folds.last.getLong(1) + folds.last.getLong(2) === n.toLong)
+    // a global-order window (ntile over ts) would shuffle all n distinct
+    // timestamps into one partition; only the per-range-partition offsets
+    // and the per-fold totals may go there
+    val single = new AdaptiveSparkPlanHelper {}.collect(
+        out.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
+        e.metrics("shuffleRecordsWritten").value
+    }
+    assert(single.nonEmpty && single.forall(_ <= 100), single)
+  }
+
   test("tokenChunks: stride/overlap math, short and empty docs") {
     val docs = Seq(
       (1L, (1 to 100).map(i => s"w$i").mkString(" ")), // 100 tokens

@@ -286,12 +286,91 @@ class StreamingSpec extends AnyFunSuite {
       checkpoint = s"$tmp/chk")
     q.processAllAvailable()
     q.stop()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("hour_start", "event_type").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-    val batch = rows(EventStreams.hourlyTypeCounts(spark.read.parquet(eventsDir)))
-    assert(rows(vl.read(spark, "gold", "hourly")) === batch)
+    assert(goldRows(vl.read(spark, "gold", "hourly")) ===
+      goldRows(EventStreams.hourlyTypeCounts(spark.read.parquet(eventsDir))))
+  }
+
+  /** The `eventsDir` rows as two one-file drops (two micro-batches under
+    * `maxFilesPerTrigger` 1), `dayShift` days later. */
+  private def goldDrops(dir: String, dayShift: Int = 0): String = {
+    import spark.implicits._
+    Seq(
+      Seq((1L, "10:05:00", 7L, "click", 1.0), (2L, "10:15:00", 7L, "click", 2.0),
+        (3L, "11:05:00", 7L, "view", 3.0)),
+      Seq((4L, "11:20:00", 8L, "click", 4.0), (5L, "13:00:00", 8L, "view", 5.0)))
+      .zipWithIndex.foreach { case (rows, i) =>
+        rows.map { case (id, t, u, typ, v) =>
+          (id, s"2021-01-${1 + dayShift} $t", u, typ, v, "{}") }
+          .toDF("event_id", "ts_s", "user_id", "event_type", "value", "props")
+          .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
+          .select("event_id", "ts", "user_id", "event_type", "value", "props")
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/d$i")
+      }
+    dir
+  }
+
+  private def runGold(vl: graft.sources.VersionedLake, src: String,
+                      chk: String): Unit = {
+    val q = EventStreams.hourlyGoldToLake(
+      spark.readStream.schema(EventStreams.eventsSchema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$src/*"),
+      vl, "gold", "hourly", checkpoint = chk)
+    q.processAllAvailable(); q.stop()
+  }
+
+  private def goldRows(df: org.apache.spark.sql.DataFrame) =
+    df.orderBy("hour_start", "event_type").collect()
+      .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
+
+  /** Forget the checkpoint's last committed batch: the crash after the
+    * sink's commit and before Spark's, so a restart replays that batch. */
+  private def dropLastCommit(chk: String): Unit = {
+    val commits = new java.io.File(s"$chk/commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    assert(new java.io.File(commits, last).delete())
+    new java.io.File(commits, s".$last.crc").delete()
+  }
+
+  test("hourlyGoldToLake: a batch replayed after its fold committed folds once") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-gold-crash").toString
+    val vl = graft.sources.VersionedLake(s"file://$tmp/lake")
+    val src = goldDrops(s"$tmp/drops")
+    runGold(vl, src, s"$tmp/chk")
+    dropLastCommit(s"$tmp/chk")
+    // no side file may carry the replay check: only the table survives
+    new java.io.File(s"$tmp/lake/gold").listFiles()
+      .filterNot(_.getName == "hourly")
+      .foreach(f => org.apache.commons.io.FileUtils.forceDelete(f))
+    val before = vl.currentVersion(spark, "gold", "hourly")
+    runGold(vl, src, s"$tmp/chk")
+    assert(goldRows(vl.read(spark, "gold", "hourly")) ===
+      goldRows(EventStreams.hourlyTypeCounts(spark.read.parquet(s"$src/*"))))
+    assert(vl.currentVersion(spark, "gold", "hourly") === before)
+  }
+
+  test("hourlyGoldToLake: a stream on a new checkpoint folds all of its batches") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-gold-newchk").toString
+    val vl = graft.sources.VersionedLake(s"file://$tmp/lake")
+    runGold(vl, goldDrops(s"$tmp/drops1"), s"$tmp/chk1")
+    // new events, new checkpoint: its batch ids restart at 0
+    runGold(vl, goldDrops(s"$tmp/drops2", dayShift = 1), s"$tmp/chk2")
+    val all = spark.read.parquet(s"$tmp/drops1/*")
+      .unionByName(spark.read.parquet(s"$tmp/drops2/*"))
+    assert(goldRows(vl.read(spark, "gold", "hourly")) ===
+      goldRows(EventStreams.hourlyTypeCounts(all)))
+  }
+
+  test("hourlyGoldToLake: a replay after lake.compact of the gold table folds once") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-gold-compact").toString
+    val vl = graft.sources.VersionedLake(s"file://$tmp/lake")
+    val src = goldDrops(s"$tmp/drops")
+    runGold(vl, src, s"$tmp/chk")
+    vl.compact(spark, "gold", "hourly", filesPerPartition = 1)
+    dropLastCommit(s"$tmp/chk")
+    runGold(vl, src, s"$tmp/chk")
+    assert(goldRows(vl.read(spark, "gold", "hourly")) ===
+      goldRows(EventStreams.hourlyTypeCounts(spark.read.parquet(s"$src/*"))))
   }
 
   test("streaming doc curation: NFC collapses cross-encoding dups, quality floor holds, replay appends nothing") {
@@ -341,7 +420,6 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-neardup").toString
     val lake = graft.sources.VersionedLake(s"$tmp/lake")
-    val keysPath = s"$tmp/corpus_keys"
     def write(dir: String, rows: Seq[(Long, String)]): Unit =
       rows.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -354,13 +432,13 @@ class StreamingSpec extends AnyFunSuite {
       (3L, "a perfectly ordinary second document about parquet files")))
     val q = streaming.DocStreams.nearDupCurateToLake(
       streaming.DocStreams.readStream(spark, s"$tmp/drop1"), lake,
-      "bronze", "docs", keysPath, s"$tmp/chk1")
+      "bronze", "docs", "corpus_keys", s"$tmp/chk1")
     q.processAllAvailable(); q.stop()
     val got1 = lake.read(spark, "bronze", "docs")
     assert(got1.count() === 2)
     assert(got1.select("doc_id").as[Long].collect().toSet === Set(1L, 3L))
-    // the corpus-key artifact holds the survivors' band keys
-    val keys1 = spark.read.parquet(keysPath)
+    // the corpus-key table holds the survivors' band keys
+    val keys1 = lake.read(spark, "bronze", "corpus_keys")
     assert(keys1.select("id").distinct().as[Long].collect().toSet === Set(1L, 3L))
     // drop 2 via a FRESH stream: a verbatim replay of doc 1 under a new id
     // (drops against the stored keys) + genuinely new content (survives)
@@ -369,7 +447,7 @@ class StreamingSpec extends AnyFunSuite {
       (6L, "genuinely new content that has never been seen before anywhere")))
     val q2 = streaming.DocStreams.nearDupCurateToLake(
       streaming.DocStreams.readStream(spark, s"$tmp/drop2"), lake,
-      "bronze", "docs", keysPath, s"$tmp/chk2")
+      "bronze", "docs", "corpus_keys", s"$tmp/chk2")
     q2.processAllAvailable(); q2.stop()
     val got2 = lake.read(spark, "bronze", "docs")
     assert(got2.count() === 3)
@@ -389,7 +467,6 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-shortdoc").toString
     val lake = graft.sources.VersionedLake(s"$tmp/lake")
-    val keysPath = s"$tmp/corpus_keys"
     def write(dir: String, rows: Seq[(Long, String)]): Unit =
       rows.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -402,7 +479,7 @@ class StreamingSpec extends AnyFunSuite {
       (3L, "a perfectly ordinary long document about parquet row groups")))
     val q = streaming.DocStreams.nearDupCurateToLake(
       streaming.DocStreams.readStream(spark, s"$tmp/drop1"), lake,
-      "bronze", "docs", keysPath, s"$tmp/chk1")
+      "bronze", "docs", "corpus_keys", s"$tmp/chk1")
     q.processAllAvailable(); q.stop()
     val got1 = lake.read(spark, "bronze", "docs")
     assert(got1.count() === 2)
@@ -412,103 +489,95 @@ class StreamingSpec extends AnyFunSuite {
     // so only the exact-fingerprint pass against the lake can drop it
     val q2 = streaming.DocStreams.nearDupCurateToLake(
       streaming.DocStreams.readStream(spark, s"$tmp/drop1"), lake,
-      "bronze", "docs", keysPath, s"$tmp/chk2")
+      "bronze", "docs", "corpus_keys", s"$tmp/chk2")
     q2.processAllAvailable(); q2.stop()
     val got2 = lake.read(spark, "bronze", "docs")
     assert(got2.count() === 2) // nothing re-appended — including "ok bye"
     assert(got2.select("doc_id").as[Long].collect().toSet === Set(1L, 3L))
   }
 
-  test("compactCorpusKeys: screen results identical pre/post, file count bounded") {
+  private def docRows(rows: Seq[(Long, String)]): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    rows.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+  }
+
+  /** Data dirs the current snapshot of `zone/table` references. */
+  private def snapshotDirs(lake: graft.sources.VersionedLake, zone: String,
+                           table: String): Int =
+    lake.history(spark, zone, table).orderBy(col("version").desc)
+      .head().getAs[Int]("n_entries")
+
+  test("nearDupCurateToLake: the near-dup screen is identical before and " +
+    "after lake.compact of the keys table") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-compact").toString
     val lake = graft.sources.VersionedLake(s"$tmp/lake")
-    val keysPath = s"$tmp/corpus_keys"
-    def write(dir: String, rows: Seq[(Long, String)]): Unit =
-      rows.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(dir)
-    // three separate drops → three key-append micro-batches → ≥3 files
+    // three separate drops → three key-append micro-batches → three dirs
     val texts = Seq(
       4L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
       5L -> "one two three four five six seven eight nine ten eleven",
       6L -> "parquet files hold columnar row groups with statistics pages")
     texts.zipWithIndex.foreach { case ((id, txt), i) =>
-      write(s"$tmp/drop$i", Seq(id -> txt))
+      docRows(Seq(id -> txt)).write.mode("overwrite").parquet(s"$tmp/drop$i")
       val q = streaming.DocStreams.nearDupCurateToLake(
         streaming.DocStreams.readStream(spark, s"$tmp/drop$i"), lake,
-        "bronze", "docs", keysPath, s"$tmp/chk$i")
+        "bronze", "docs", "corpus_keys", s"$tmp/chk$i")
       q.processAllAvailable(); q.stop()
     }
-    def parquetFiles(): Int =
-      new java.io.File(keysPath).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles() >= 3) // one append per micro-batch — the growth
+    assert(snapshotDirs(lake, "bronze", "corpus_keys") === 3)
     // a probe batch: near-dup of doc 4 (must drop) + new content (must pass)
-    val probe = Seq(
-      (7L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-      (8L, "completely fresh content nothing upstream has ever mentioned"))
-      .map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val probe = docRows(Seq(
+      7L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+      8L -> "completely fresh content nothing upstream has ever mentioned"))
     def screen(): Set[Long] = graft.operators.Incremental
-      .minhashNewDocsAgainstKeys(probe, spark.read.parquet(keysPath),
+      .minhashNewDocsAgainstKeys(probe, lake.read(spark, "bronze", "corpus_keys"),
         "doc_id", "text")
       .select("doc_id").as[Long].collect().toSet
     val before = screen()
     assert(before === Set(8L))
-    val n = streaming.DocStreams.compactCorpusKeys(spark, keysPath)
-    assert(n > 0)
-    assert(parquetFiles() === 1) // bounded: one file after compaction
+    val keyRows = lake.read(spark, "bronze", "corpus_keys").count()
+    lake.compact(spark, "bronze", "corpus_keys", filesPerPartition = 1)
+    assert(snapshotDirs(lake, "bronze", "corpus_keys") === 1)
+    assert(lake.read(spark, "bronze", "corpus_keys").count() === keyRows)
     assert(screen() === before) // identical screen pre/post compaction
   }
 
-  test("nearDupCurateToLake: the every-N-batches hook keeps the key-file " +
-    "count bounded over a 20-micro-batch stream, no manual compaction") {
+  test("nearDupCurateToLake: the key table compacts at its 64th commit") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-autocomp").toString
     val lake = graft.sources.VersionedLake(s"$tmp/lake")
-    val keysPath = s"$tmp/corpus_keys"
-    val src = s"$tmp/drops"
-    new java.io.File(src).mkdirs()
     // every token carries the doc index → shingle sets are fully
     // DISJOINT across docs (Jaccard 0), so no legitimate doc can ever
     // LSH-collide with another and the lake count is exact
-    def drop(i: Int): Unit =
-      Seq((100L + i,
-        s"doc$i alpha$i beta$i gamma$i delta$i epsilon$i zeta$i " +
-          s"eta$i theta$i iota$i kappa$i lambda$i"))
-        .map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$src/d$i")
-    // ONE stream, ONE checkpoint: batchIds increment 0..19, so the
-    // compactEveryBatches=5 hook fires at batches 4, 9, 14, 19 — the
-    // 20-batch lifetime ends compacted with no manual intervention
-    drop(0)
+    def doc(i: Int) = (100L + i,
+      s"doc$i alpha$i beta$i gamma$i delta$i epsilon$i zeta$i " +
+        s"eta$i theta$i iota$i kappa$i lambda$i")
+    def keys(i: Int) =
+      graft.operators.Incremental.bandedKeys(docRows(Seq(doc(i))), "doc_id", "text")
+    // seed the keys table as a caller would, grow it to 3 dirs, then
+    // advance it to v63 with metadata-only commits instead of 60 batches
+    lake.write(keys(0), "bronze", "corpus_keys")
+    lake.append(keys(1), "bronze", "corpus_keys")
+    lake.append(keys(2), "bronze", "corpus_keys")
+    while (lake.currentVersion(spark, "bronze", "corpus_keys") < 63)
+      lake.restore(spark, "bronze", "corpus_keys",
+        lake.currentVersion(spark, "bronze", "corpus_keys"))
+    assert(snapshotDirs(lake, "bronze", "corpus_keys") === 3)
+    // one micro-batch: a copy of seeded doc 0 (screened out) + doc 3 (new)
+    docRows(Seq(doc(0).copy(_1 = 900L), doc(3)))
+      .write.mode("overwrite").parquet(s"$tmp/drop")
     val q = streaming.DocStreams.nearDupCurateToLake(
-      spark.readStream.schema(streaming.DocStreams.docSchema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$src/*"),
-      lake, "bronze", "docs", keysPath, s"$tmp/chk",
-      compactEveryBatches = 5)
-    q.processAllAvailable()
-    (1 until 20).foreach { i => drop(i); q.processAllAvailable() }
-    q.stop()
-    def parquetFiles(): Int = new java.io.File(keysPath).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    // batch 19 compacted to 1 file; without the hook this is ~20
-    assert(parquetFiles() === 1)
-    // the screen still works after repeated in-stream swaps: a near-dup
-    // of an EARLY doc (pre-several-compactions) must still drop
-    assert(lake.read(spark, "bronze", "docs").count() === 20)
-    val probe = Seq(
-      (900L, "doc0 alpha0 beta0 gamma0 delta0 epsilon0 zeta0 " +
-        "eta0 theta0 iota0 kappa0 lambda0"),
-      (901L, "entirely novel probe content nothing upstream mentioned"))
-      .map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val kept = graft.operators.Incremental
-      .minhashNewDocsAgainstKeys(probe, spark.read.parquet(keysPath),
-        "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept === Set(901L))
+      streaming.DocStreams.readStream(spark, s"$tmp/drop"), lake,
+      "bronze", "docs", "corpus_keys", s"$tmp/chk")
+    q.processAllAvailable(); q.stop()
+    assert(lake.read(spark, "bronze", "docs").select("doc_id").as[Long]
+      .collect().toSeq === Seq(103L))
+    // the batch's key append was commit 64, so the table compacted (v65)
+    assert(lake.currentVersion(spark, "bronze", "corpus_keys") === 65)
+    assert(snapshotDirs(lake, "bronze", "corpus_keys") === 1)
+    assert(lake.read(spark, "bronze", "corpus_keys").select("id").distinct()
+      .as[Long].collect().toSet === Set(100L, 101L, 102L, 103L))
   }
 
   test("abMonitorSink: cumulative e-process across micro-batches; " +
@@ -549,9 +618,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(b1.getAs[Long]("n_a") === 3L && b1.getAs[Long]("n_b") === 2L)
     assert(b1.getAs[Long]("conv_a") === 3L)
     assert(b1.getAs[Boolean]("can_stop")) // .983 ≥ ln 2 — stop reached
-    // REPLAY through a fresh checkpoint: state rows duplicate by
-    // batch_id with identical content; the cumulative cells must not
-    // double-count
+    // REPLAY through a fresh checkpoint: each batch id's cells replace
+    // their own row, so the cumulative cells must not double-count
     val q2 = run(s"$tmp/chk2"); q2.stop()
     val last = spark.read.parquet(s"$tmp/out/monitor")
       .orderBy(org.apache.spark.sql.functions.col("batch_id").desc)
@@ -560,49 +628,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(last.getAs[Long]("conv_a") === 3L)
   }
 
-  test("abMonitorSink: state store self-compacts every N batches; " +
-    "monitor readout identical with compaction on and off") {
+  test("abMonitorSink: the state is one data dir after 5 micro-batches; " +
+    "monitor rows carry the cumulative cells") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-abmonc").toString
     val src = s"$tmp/drops"; new java.io.File(src).mkdirs()
-    def drop(name: String, rows: Seq[(Long, Long, String)]): Unit =
-      rows.map { case (id, uid, typ) =>
-        (id, new java.sql.Timestamp(1609500000000L + id * 1000), uid,
-          typ, 1.0, "{}")
-      }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(s"$src/$name")
-    // 5 single-file micro-batches (≥ 2N for N = 2): alternating outcomes
+    // batch i: arm A (even uid) converts iff i is even, arm B never
     (0 until 5).foreach { i =>
-      drop(s"d$i", Seq(
-        (2L * i + 1, 2L * i + 2, if (i % 2 == 0) "purchase" else "view"),
-        (2L * i + 2, 2L * i + 3, "view")))
+      Seq((2L * i + 1, 2L * i + 2, if (i % 2 == 0) "purchase" else "view"),
+        (2L * i + 2, 2L * i + 3, "view"))
+        .map { case (id, uid, typ) =>
+          (id, new java.sql.Timestamp(1609500000000L + id * 1000), uid,
+            typ, 1.0, "{}")
+        }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("overwrite").parquet(s"$src/d$i")
     }
-    val schema = spark.read.parquet(s"$src/d0").schema
-    def run(out: String, chk: String, every: Int): Unit = {
-      val q = EventStreams.abMonitorSink(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$src/*"),
-        col("user_id") % 2 === 0, col("event_type") === "purchase",
-        out, chk, tau = 0.25, alpha = 0.5,
-        compactEveryBatches = every)
-      q.processAllAvailable(); q.stop()
-    }
-    run(s"$tmp/outA", s"$tmp/chkA", 2) // compacts after batches 1 and 3
-    run(s"$tmp/outB", s"$tmp/chkB", 0) // disabled — one file per batch
-    def stateFiles(out: String): Int =
-      new java.io.File(s"$out/state").listFiles()
-        .count(f => f.getName.endsWith(".parquet"))
-    // compacted: batch 3's swap left 1 file; batch 4 appended 1 more.
-    // Without the hook the store carries one file per historical batch.
-    assert(stateFiles(s"$tmp/outA") <= 2)
-    assert(stateFiles(s"$tmp/outB") === 5)
-    // readout identity: compaction must not change a single monitor cell
-    val a = spark.read.parquet(s"$tmp/outA/monitor")
-      .orderBy("batch_id").collect().map(_.toString)
-    val b = spark.read.parquet(s"$tmp/outB/monitor")
-      .orderBy("batch_id").collect().map(_.toString)
-    assert(a.length === 5)
-    assert(a.toSeq === b.toSeq)
+    val q = EventStreams.abMonitorSink(
+      spark.readStream.schema(spark.read.parquet(s"$src/d0").schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$src/*"),
+      col("user_id") % 2 === 0, col("event_type") === "purchase",
+      s"$tmp/out", s"$tmp/chk", tau = 0.25, alpha = 0.5)
+    q.processAllAvailable(); q.stop()
+    val state = graft.sources.VersionedLake(s"$tmp/out")
+    assert(snapshotDirs(state, "state", "cells") === 1)
+    val mon = spark.read.parquet(s"$tmp/out/monitor").orderBy("batch_id")
+      .select("batch_id", "n_a", "n_b", "conv_a", "conv_b")
+      .as[(Long, Long, Long, Long, Long)].collect().toSeq
+    assert(mon === (0 until 5).map(i =>
+      (i.toLong, i + 1L, i + 1L, i / 2 + 1L, 0L)))
   }
 
   test("driftMonitorSink: per-batch drift report equals the batch operator") {

@@ -55,6 +55,22 @@ class TimeseriesSpec extends AnyFunSuite {
     assert(got === Seq(1.0, 3.0))
   }
 
+  test("resampleFfill: with keys ≈ rows the per-key stats and carry tables " +
+    "plan no broadcast") {
+    // broadcasts only on an explicit hint in this session: the stats and
+    // carry tables are one row per key, data-sized when keys ≈ rows
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val df = s2.range(2000).select(col("id").as("k"),
+        explode(array(lit(0L), lit(180L))).as("dt"))
+      .select(col("k"), timestamp_seconds(col("k") * 60 + col("dt")).as("t"),
+        col("dt").cast("double").as("v"))
+    val out = Timeseries.resampleFfill(df, "k", "t", "v", stepSeconds = 60L)
+    assert(out.collect().length === 2000 * 4) // bins 0..3 per key
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastExchange"), plan)
+  }
+
   private def anomalyRows(vals: Seq[Double], lookback: Int = 20,
                           z: Double = 3.0): Seq[(Int, Double)] = {
     val df = vals.zipWithIndex

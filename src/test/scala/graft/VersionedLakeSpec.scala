@@ -578,7 +578,7 @@ class VersionedLakeSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       // reach into the protocol: attempt to re-commit an existing version,
       // exactly what a writer that resolved version 1 pre-race would do
-      vl.commitManifest(spark, t, 2, Nil, Nil)
+      vl.commitManifest(spark, t, 2, Nil, Nil, None, Map.empty)
     }
     assert(fs.listStatus(mdir).length === before) // no half-commit left
   }
@@ -980,5 +980,40 @@ class VersionedLakeSpec extends AnyFunSuite {
     val cur = vl.read(spark, "silver", "empty")
     assert(cur.count() === 0)
     assert(cur.columns.toSet === Set("k", "ver")) // schema pinned
+  }
+
+  test("mergeAggregate txn: a batch at or below its app's watermark folds " +
+    "nothing, and every other commit path carries the watermarks") {
+    val vl = newLake()
+    def fold(app: String, batch: Long, n: Long): Int =
+      vl.mergeAggregate(spark, "gold", "txn", Seq(("h1", n)).toDF("hr", "n"),
+        keys = Seq("hr"), sumCols = Seq("n"), txn = Some(app -> batch))
+    def h1(): Long = vl.read(spark, "gold", "txn").where(col("hr") === "h1")
+      .select("n").head().getLong(0)
+    assert(fold("a", 0, 1) === 1)
+    assert(fold("a", 0, 1) === 1) // replay: no commit, the current version
+    assert(fold("b", 0, 10) === 2) // another writer's batch 0 is its own
+    assert(h1() === 11)
+    val paths: Seq[(String, () => Int)] = Seq(
+      "upsert" -> (() => vl.upsert(spark, "gold", "txn",
+        Seq(("h2", 5L)).toDF("hr", "n"), key = "hr", versionCol = "n")),
+      "update" -> (() => vl.update(spark, "gold", "txn", col("hr") === "h2",
+        Map("n" -> lit(6L)))),
+      "delete" -> (() => vl.delete(spark, "gold", "txn", col("hr") === "h2")),
+      "append" -> (() => vl.append(Seq(("h3", 0L)).toDF("hr", "n"), "gold", "txn")),
+      "compact" -> (() => vl.compact(spark, "gold", "txn", filesPerPartition = 1)),
+      "optimizeZOrder" -> (() => vl.optimizeZOrder(spark, "gold", "txn",
+        Seq("n"), slicesPerPartition = 1)),
+      "restore" -> (() => vl.restore(spark, "gold", "txn", 2)),
+      "write" -> (() => vl.write(vl.read(spark, "gold", "txn"), "gold", "txn")))
+    for ((name, commit) <- paths) {
+      val v = commit()
+      assert(fold("a", 0, 1) === v && fold("b", 0, 10) === v,
+        s"$name dropped a watermark")
+    }
+    assert(h1() === 11)
+    val cur = vl.currentVersion(spark, "gold", "txn")
+    assert(fold("a", 1, 1) === cur + 1) // the next batch folds
+    assert(h1() === 12)
   }
 }
