@@ -1502,11 +1502,13 @@ object TestQueries {
         concat(col("source"), lit("@example.com")),
         lit("call 555-123-4567 or 555.987.6543"))).as("clean_text"))
 
-  /** Key-skew report ([[operators.Analytics.keySkew]]) — pre-join
+  /** Key-skew report ([[operators.Quality.keySkew]]) — pre-join
     * diagnostics for salt/partition sizing.
     */
   def q73SkewReport(s: SparkSession, dir: String): DataFrame =
-    operators.Analytics.keySkew(t(s, dir, "lineitem"), "l_suppkey", 10)
+    operators.Quality.keySkew(t(s, dir, "lineitem"), Seq("l_suppkey"), 10)
+      .select(col("l_suppkey"), col("n"), round(col("share"), 6).as("share"))
+      .orderBy(col("n").desc, col("l_suppkey"))
 
   /** K-fold assignment ([[operators.Splits.kFold]]) — modulo fold for
     * cross-engine parity; xxhash64 default covered by SplitsSpec.
@@ -3813,17 +3815,18 @@ object TestQueries {
         quantizeSeconds = 3600L)
       .orderBy("stage_from")
 
-  /** Benjamini–Hochberg adjustment ([[operators.Stats.bhAdjust]]) over a
+  /** Benjamini–Hochberg adjustment ([[operators.Stats.bhFdr]]) over a
     * deterministic per-doc p-value table — ranks, the reverse running
     * min and the clamp replayed row-for-row.
     */
   def q248BhAdjust(s: SparkSession, dir: String): DataFrame =
-    operators.Stats.bhAdjust(
+    operators.Stats.bhFdr(
         t(s, dir, "documents").select(col("doc_id"),
           (((col("doc_id") * 7919) % 1000) / lit(1000.0)).as("p")),
         "doc_id", "p")
-      .select(col("doc_id"), round(col("p"), 6).as("p_value"), col("rank"),
-        round(col("q_value"), 6).as("q_value"), col("significant"))
+      .select(col("test").as("doc_id"), round(col("p"), 6).as("p_value"),
+        col("rank"), round(col("p_adj"), 6).as("q_value"),
+        col("rejected").as("significant"))
       .orderBy("doc_id")
 
   /** CMH stratified test ([[operators.Stats.cmhTest]]) of the user-mod
@@ -4146,10 +4149,6 @@ object TestQueries {
       .orderBy("metric")
   }
 
-  /** Hot-key diagnostic ([[operators.Quality.keySkew]]): the 10 heaviest
-    * user buckets of the event stream with shares and skew factors —
-    * counts, ranks and the mean-normalized factor replayed exactly.
-    */
   /** Temperature mixture sampling ([[operators.Splits.temperatureSample]]):
     * tau = 0.5 tempered per-lang shares over token mass, budget 30 % of
     * corpus tokens, md5-ordered exact quotas — DuckDB replays the pow
@@ -5245,6 +5244,10 @@ object TestQueries {
           "o" -> "n", "a" -> "n", "an" -> "d", "er" -> "s"))
       .orderBy("source")
 
+  /** Hot-key diagnostic ([[operators.Quality.keySkew]]): the 10 heaviest
+    * user buckets of the event stream with shares and skew factors —
+    * counts, ranks and the mean-normalized factor replayed exactly.
+    */
   def q276KeySkew(s: SparkSession, dir: String): DataFrame =
     operators.Quality.keySkew(
         Tables.loadEvents(s, dir)

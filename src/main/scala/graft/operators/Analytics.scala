@@ -50,14 +50,6 @@ object Analytics {
     */
   def topK(df: DataFrame, k: Int): DataFrame = df.limit(k)
 
-  /** A5 — global scalar min/max over a column (drives the date spine,
-    * nb:1185-1186). Runs as a partial+final agg; collects exactly one row.
-    */
-  def minMax(df: DataFrame, c: String): (Any, Any) = {
-    val r = df.agg(min(col(c)), max(col(c))).head()
-    (r.get(0), r.get(1))
-  }
-
   /** Temperature-scaled mixture allocation — the multilingual pre-training
     * recipe (mBERT/XLM-R style): sampling probability
     * `p_g = share_g^τ / Σ share_h^τ` flattens the natural distribution
@@ -248,40 +240,6 @@ object Analytics {
           .as("weight"))
   }
 
-  /** Key-skew report: the top-N heaviest keys and their share of all rows —
-    * what you run BEFORE choosing a salt factor or partition count for a
-    * join on `key`. One partial+final agg over the fact; the per-key counts
-    * (≪ fact) cross-join a broadcast one-row total; top-N is
-    * TakeOrderedAndProject with the key as tiebreaker.
-    */
-  def keySkew(df: DataFrame, key: String, topN: Int = 10): DataFrame = {
-    val counts = df.groupBy(key).agg(count(lit(1)).as("n"))
-    val total = counts.agg(sum("n").as("__tot"))
-    counts.crossJoin(broadcast(total))
-      .select(col(key), col("n"),
-        round(col("n").cast("double") / col("__tot").cast("double"), 6)
-          .as("share"))
-      .orderBy(col("n").desc, col(key)).limit(topN)
-  }
-
-  /** Per-group robust scaling — median/IQR standardization of a score
-    * column WITHIN each group, the cross-source calibration step that
-    * makes quality scores comparable before a global threshold or
-    * mixture weighting is applied (a raw "length" or "perplexity" cut
-    * means different things in different sources; a robust z of +3 means
-    * the same thing everywhere). Median/IQR rather than mean/stddev so a
-    * source's own outliers don't stretch its scale.
-    *
-    * robust_z = clip((x − median) / (q75 − q25), ±clip); groups with a
-    * degenerate IQR of 0 scale to 0 (every value is "typical").
-    *
-    * Shape for scale: ONE exact-percentile aggregate per group (Spark's
-    * `percentile` — a partial-aggregable sketchless digest; swap in
-    * `percentile_approx` at petabyte group sizes), broadcast back onto
-    * the rows — no window over the fact, no per-row shuffle beyond the
-    * one the group join needs; with few groups the join is a broadcast
-    * hash join and the fact never shuffles at all.
-    */
   /** Top-k rows per group WITHOUT a window sort — a k-bounded
     * [[graft.functions.expressions.TopKAgg]] buffer per group, maintained
     * map-side, so the shuffle carries ≤ k entries per group per map task
@@ -335,6 +293,24 @@ object Analytics {
           .as("trimmed_mean"))
   }
 
+  /** Per-group robust scaling — median/IQR standardization of a score
+    * column WITHIN each group, the cross-source calibration step that
+    * makes quality scores comparable before a global threshold or
+    * mixture weighting is applied (a raw "length" or "perplexity" cut
+    * means different things in different sources; a robust z of +3 means
+    * the same thing everywhere). Median/IQR rather than mean/stddev so a
+    * source's own outliers don't stretch its scale.
+    *
+    * robust_z = clip((x − median) / (q75 − q25), ±clip); groups with a
+    * degenerate IQR of 0 scale to 0 (every value is "typical").
+    *
+    * Shape for scale: ONE exact-percentile aggregate per group (Spark's
+    * `percentile` — a partial-aggregable sketchless digest; swap in
+    * `percentile_approx` at petabyte group sizes), broadcast back onto
+    * the rows — no window over the fact, no per-row shuffle beyond the
+    * one the group join needs; with few groups the join is a broadcast
+    * hash join and the fact never shuffles at all.
+    */
   def robustScale(df: DataFrame, groupCol: String, valueCol: String,
                   clip: Double = 3.0): DataFrame = {
     require(clip > 0, s"clip must be positive: $clip")

@@ -127,27 +127,30 @@ object Pinning {
     * parallelism derived from the runtime session, not a constant tuned
     * for any one deployment.
     *
-    * Intended for scan-rooted frames (narrow projections / filters over a
-    * file scan): `df.rdd` plans the frame to inspect its partitioning, and
-    * on a plan containing exchanges that inspection would EXECUTE AQE
-    * query stages — so frames whose optimized plan carries a join,
-    * aggregate, window, sort or repartition are returned untouched (their
-    * parallelism already comes from the shuffle width). The exchange
-    * hashes on `keys` (normally the record id — unique, so it spreads
-    * evenly): hash assignment is deterministic per row with NO
+    * Only provably scan-rooted frames are widened: an optimized plan of
+    * projections, filters and unions over leaves (a union of two scans is
+    * as exchange-free as one scan). `df.rdd` plans the frame to
+    * inspect its partitioning, and on a plan containing an exchange (a
+    * join, aggregate, window, sort, repartition, limit, …) that inspection
+    * would EXECUTE AQE query stages — so every other plan is returned
+    * untouched (its parallelism already comes from the shuffle width). The
+    * exchange hashes on `keys` (normally the record id — unique, so it
+    * spreads evenly): hash assignment is deterministic per row with NO
     * pre-exchange sort, unlike keyless round-robin which pays a
     * per-partition binary sort of the payloads
     * (`spark.sql.execution.sortBeforeRepartition`) to be retry-safe.
     */
   def spread(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical
-    val shuffled = df.queryExecution.optimizedPlan.find {
-      case _: logical.Join | _: logical.Aggregate | _: logical.Window |
-           _: logical.Sort | _: logical.RepartitionOperation => true
+    def scanRooted(p: logical.LogicalPlan): Boolean = p match {
+      case _: logical.LeafNode => true
+      case _: logical.Project | _: logical.Filter | _: logical.Union =>
+        p.children.forall(scanRooted)
       case _ => false
-    }.isDefined
+    }
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (!shuffled && df.rdd.getNumPartitions * 2 < target)
+    if (scanRooted(df.queryExecution.optimizedPlan) &&
+        df.rdd.getNumPartitions * 2 < target)
       df.repartition(target, keys: _*)
     else df
   }

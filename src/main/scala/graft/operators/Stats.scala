@@ -1864,36 +1864,6 @@ object Stats {
       .withColumn("qte", col("q_b") - col("q_a"))
   }
 
-  /** Benjamini–Hochberg FDR adjustment — the multiple-testing companion
-    * every per-segment sweep of [[welchT]]/[[ksTest]]/[[chiSquareIndependence]]
-    * needs: run one test per segment, then control the EXPECTED false
-    * discovery rate instead of eyeballing raw p's (at 100 segments, five
-    * p < 0.05 are expected under pure noise). q_i = min over j ≥ i of
-    * p₍ⱼ₎·n/j over the p-sorted tests (ties rank by `idCol` so replays
-    * are exact), clamped to 1. Returns every input row plus
-    * (rank, q_value, significant = q ≤ alpha).
-    *
-    * The input is usually a TEST table (one row per hypothesis —
-    * segments, features, arms), bounded by design; both the rank and the
-    * reverse running min are nonetheless DISTRIBUTED ([[Ranks.running]]),
-    * so a million-hypothesis sweep (per-token tests, per-n-gram
-    * contamination probes) never funnels through one task either.
-    */
-  def bhAdjust(df: DataFrame, idCol: String, pCol: String,
-               alpha: Double = 0.05): DataFrame = {
-    require(alpha > 0 && alpha < 1, s"alpha must be in (0,1): $alpha")
-    val p = col(pCol).cast("double")
-    val n = df.agg(count(lit(1)).as("__n"))
-    val order = Seq(p, col(idCol))
-    val ranked = Ranks.running(df.crossJoin(broadcast(n)), order,
-        rankCol = Some("rank"))
-      .withColumn("__q0", p * col("__n") / col("rank"))
-    Ranks.running(ranked, order, suffixMins = Seq("__q0" -> "__qm"))
-      .withColumn("q_value", least(lit(1.0), col("__qm")))
-      .withColumn("significant", col("q_value") <= alpha)
-      .drop("__n", "__q0", "__qm")
-  }
-
   /** Cochran–Mantel–Haenszel stratified 2×2 test + Mantel-Haenszel pooled
     * odds ratio — the Simpson's-paradox guard: when arm assignment is
     * confounded with a stratum (source, country, device), the CRUDE

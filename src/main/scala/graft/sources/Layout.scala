@@ -21,19 +21,11 @@ object Layout {
     * driver-side array of ≤ 2^bits doubles — broadcast as literals, never
     * a shuffle.
     */
-  private def boundaries(df: DataFrame, cols: Seq[String], bits: Int,
-                         sampleFraction: Double): Seq[Array[Double]] = {
+  private def boundaries(df: DataFrame, cols: Seq[String],
+                         bits: Int): Seq[Array[Double]] = {
     val n = (1 << bits) - 1
     val probs = (1 to n).map(_.toDouble / (1 << bits)).toArray
-    val src = if (sampleFraction < 1.0) df.sample(sampleFraction, seed = 42) else df
-    val cuts = src.stat.approxQuantile(cols.toArray, probs, 0.01)
-      .toSeq.map(_.distinct)
-    // A too-small sample can come back empty → zero cut points → every row
-    // would get the same constant key. Fall back to the full input rather
-    // than silently losing the clustering.
-    if (sampleFraction < 1.0 && cuts.exists(_.isEmpty))
-      df.stat.approxQuantile(cols.toArray, probs, 0.01).toSeq.map(_.distinct)
-    else cuts
+    df.stat.approxQuantile(cols.toArray, probs, 0.01).toSeq.map(_.distinct)
   }
 
   /** Bucket index of `c` against sorted cut points: #(boundaries < value),
@@ -63,17 +55,10 @@ object Layout {
   /** Z-order key: rank-bucket each column (quantile cuts, so skewed
     * distributions still fill all buckets), then [[interleave]] the bucket
     * bits.
-    *
-    * `sampleFraction` < 1 sketches the quantile cuts on a sample — cut
-    * precision only shifts bucket boundaries slightly (clustering quality
-    * degrades gracefully), so at 100 TB you never pay a full scan for the
-    * cuts. Correctness is unaffected: every row still gets a key.
     */
-  def zorderKey(df: DataFrame, cols: Seq[String], bitsPerCol: Int = 4,
-                sampleFraction: Double = 1.0): Column = {
+  def zorderKey(df: DataFrame, cols: Seq[String], bitsPerCol: Int = 4): Column = {
     require(cols.nonEmpty)
-    require(sampleFraction > 0 && sampleFraction <= 1.0)
-    val cuts = boundaries(df, cols, bitsPerCol, sampleFraction)
+    val cuts = boundaries(df, cols, bitsPerCol)
     interleave(cols.zip(cuts).map { case (c, b) => bucketOf(col(c), b) },
       bitsPerCol)
   }

@@ -158,12 +158,6 @@ object Tables {
   def loadDocuments(spark: SparkSession, dir: String): DataFrame =
     normalizeTo(load(spark, dir, "documents"), "documents", documentsSchema)
 
-  /** S1 — headerless CSV scan, all columns arrive as string `_c0…_cN`
-    * (nb:250-253). No inferSchema: one pass, conform applies types.
-    */
-  def readCsvRaw(spark: SparkSession, path: String, sep: String = ","): DataFrame =
-    spark.read.format("csv").option("sep", sep).option("header", "false").load(path)
-
   /** S1 (declared-schema form) — parse straight into the target schema.
     * Preferred at scale: avoids a second projection pass over 100 TB.
     */

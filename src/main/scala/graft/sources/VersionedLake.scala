@@ -56,19 +56,16 @@ import scala.collection.mutable.ArrayBuffer
 object VersionedLake {
   /** One snapshot line: which data dir holds which partition. `key` is the
     * `/`-joined partition values ("" for an unpartitioned table); `dir` is
-    * relative to the table path and immutable once committed. `stats`, when
-    * present, is a one-line JSON object of per-column min/max/non-null
-    * counts over the dir's rows — the data-skipping index (Delta keeps the
-    * same stats in its commit log). `bloom`, when present, is the relative
-    * path of the commit's bloom-index parquet (rows `(dir, col, bloom)`),
-    * for point-lookup skipping on columns whose values are spread across
-    * every dir's min/max range. Entries carried forward by partition-scoped
-    * maintenance keep both verbatim, so the indexes never need a rebuild
-    * for untouched data.
+    * relative to the table path and immutable once committed. `stats` is a
+    * one-line JSON object of per-column min/max/non-null counts over the
+    * dir's rows — the data-skipping index (Delta keeps the same stats in
+    * its commit log). Every commit writes it; only lines of manifests
+    * older than the index lack it. Entries carried forward by
+    * partition-scoped maintenance keep it verbatim, so the index never
+    * needs a rebuild for untouched data.
     */
   final case class Entry(key: String, dir: String,
-                         stats: Option[String] = None,
-                         bloom: Option[String] = None)
+                         stats: Option[String] = None)
 
   /** `txns` maps a streaming writer's appId to the last batch id it
     * committed ([[VersionedLake.mergeAggregate]]'s `txn`, Delta's `txn`
@@ -157,20 +154,15 @@ final case class VersionedLake(root: String) {
       app -> batch.toLong
     }.toMap
     val entries = entryLines.map { l =>
-      // Optional fields `stats=<json>` and `bloom=<relpath>` (round 6+).
+      // Optional trailing fields: `stats=<json>`, and on lines from older
+      // manifests a `bloom=<relpath>` sidecar reference, which is ignored.
       // Split them off first: the markers can't occur inside key or dir
       // (generated paths; JSON string escaping means the stats field never
-      // holds a raw tab), and pre-index lines parse exactly as before.
-      val sIdx = l.indexOf("\tstats=")
-      val bIdx = l.indexOf("\tbloom=")
-      val cut = Seq(sIdx, bIdx).filter(_ >= 0).sorted.headOption.getOrElse(-1)
-      val core = if (cut < 0) l else l.substring(0, cut)
-      def field(at: Int, other: Int) =
-        if (at < 0) None
-        else Some(l.substring(at + 7, if (other > at) other else l.length))
-      val i = core.lastIndexOf('\t')
-      Entry(core.substring(0, i), core.substring(i + 1),
-        field(sIdx, bIdx), field(bIdx, sIdx))
+      // holds a raw tab), and pre-stats lines parse exactly as before.
+      val fields = l.split("\t(?=(stats|bloom)=)", -1)
+      val i = fields.head.lastIndexOf('\t')
+      Entry(fields.head.substring(0, i), fields.head.substring(i + 1),
+        fields.tail.find(_.startsWith("stats=")).map(_.stripPrefix("stats=")))
     }
     Manifest(version, cols, entries, schemaJson, txns)
   }
@@ -201,15 +193,13 @@ final case class VersionedLake(root: String) {
     val mdir = manifestsDir(t)
     val fs = fsFor(spark, mdir)
     fs.mkdirs(mdir)
-    require(entries.forall(e => (e.stats ++ e.bloom).forall(s =>
-      !s.contains("\n") && !s.contains("\t"))),
-      "entry stats/bloom fields must be one tab-free line each")
+    require(entries.forall(_.stats.forall(s => !s.contains("\n") && !s.contains("\t"))),
+      "entry stats must be one tab-free line each")
     val body = (Seq(s"cols=${partitionCols.mkString(",")}") ++
       schemaJson.map(s => s"schema=$s") ++
       txns.toSeq.sorted.map { case (app, batch) => s"txn=$app\t$batch" } ++
       entries.map(e => s"${e.key}\t${e.dir}" +
-        e.stats.fold("")(s => s"\tstats=$s") +
-        e.bloom.fold("")(b => s"\tbloom=$b"))).mkString("", "\n", "\n")
+        e.stats.fold("")(s => s"\tstats=$s"))).mkString("", "\n", "\n")
     val tmp = new Path(mdir, s".tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, false)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
@@ -257,9 +247,6 @@ final case class VersionedLake(root: String) {
     */
   private def writeDataCommit(t: String, df: DataFrame,
                               partitionCols: Seq[String],
-                              collectStats: Boolean = true,
-                              bloomCols: Seq[String] = Nil,
-                              bloomExpectedItems: Long = 1000000L,
                               sliceBy: Option[org.apache.spark.sql.Column] = None,
                               rel: String = newCommitDir()): Seq[Entry] = {
     val spark = df.sparkSession
@@ -303,20 +290,10 @@ final case class VersionedLake(root: String) {
           .stripPrefix(new Path(t).toUri.getPath).stripPrefix("/"))
       }
     }
-    val withStats =
-      if (!collectStats) bare
-      else {
-        // One re-scan of only the new data builds the skipping index,
-        // keyed by dir (unique even when slices share a partition key).
-        val stats = entryStats(spark, dest, rel, df.schema, shadows)
-        bare.map(e => e.copy(stats = stats.get(e.dir)))
-      }
-    if (bloomCols.isEmpty) withStats
-    else {
-      val idx = writeBloomIndex(spark, t, dest, rel, df.schema, shadows,
-        bloomCols, bloomExpectedItems)
-      withStats.map(e => e.copy(bloom = Some(idx)))
-    }
+    // One re-scan of only the new data builds the skipping index, keyed by
+    // dir (unique even when slices share a partition key).
+    val stats = entryStats(spark, dest, rel, df.schema, shadows)
+    bare.map(e => e.copy(stats = stats.get(e.dir)))
   }
 
   /** Full-snapshot write: a new data commit replacing every partition.
@@ -324,14 +301,10 @@ final case class VersionedLake(root: String) {
     * version-independent, so a retry just re-commits at the next slot).
     */
   def write(df: DataFrame, zone: String, table: String,
-            partitionCols: Seq[String] = Nil,
-            collectStats: Boolean = true,
-            bloomCols: Seq[String] = Nil,
-            bloomExpectedItems: Long = 1000000L): Int = retryingCommit(MaxCommitAttempts) {
+            partitionCols: Seq[String] = Nil): Int = retryingCommit(MaxCommitAttempts) {
     val spark = df.sparkSession
     val t = tablePath(zone, table)
-    val entries = writeDataCommit(t, df, partitionCols, collectStats,
-      bloomCols, bloomExpectedItems)
+    val entries = writeDataCommit(t, df, partitionCols)
     val cur = currentVersion(spark, zone, table)
     val txns = if (cur == 0) Map.empty[String, Long] else readManifest(spark, t, cur).txns
     commitManifest(spark, t, cur + 1, partitionCols, entries, Some(df.schema.json), txns)
@@ -539,114 +512,6 @@ final case class VersionedLake(root: String) {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
   }
 
-  /** Build the commit's bloom index: one grouped scan of the new data
-    * aggregating a Bloom sketch per (dir, column) with Spark's own
-    * codegen'd `BloomFilterAggregate` over `xxhash64(col)`, written as a
-    * small parquet dataset `(dir, col, bloom)` under `_index/`. Sketches
-    * never pass through the driver — the agg shuffles compact partials and
-    * the rows write straight out. Returns the index's relative path.
-    *
-    * Sizing: ~1.2 MB per million expected items per column at the default
-    * 3% fpp — sidecar files, never manifest bytes.
-    */
-  private def writeBloomIndex(spark: SparkSession, t: String, dest: String,
-                              rel: String,
-                              dataSchema: org.apache.spark.sql.types.StructType,
-                              shadows: Seq[String], bloomCols: Seq[String],
-                              expectedItems: Long): String = {
-    import org.apache.spark.sql.graftshim.ColumnShim
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    require(bloomCols.nonEmpty)
-    bloomCols.foreach { c =>
-      val f = dataSchema.fields.find(_.name == c)
-      require(f.exists(f => statsEligible(f.dataType)),
-        s"bloom column '$c' must be an atomic column of the table")
-      require(!c.exists("\t\n:;".contains(_)), s"unsupported bloom column name '$c'")
-    }
-    val readSchema = StructType(dataSchema.fields ++
-      shadows.map(s => StructField(s, StringType)))
-    val df = spark.read.schema(readSchema).parquet(dest)
-    def bloomAgg(c: String) = ColumnShim.column(
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        ColumnShim.expression(xxhash64(quoted(c))), expectedItems)
-        .toAggregateExpression())
-    val aggs = bloomCols.map(c => bloomAgg(c).as(s"bf__$c"))
-    val grouped =
-      if (shadows.isEmpty) df.agg(aggs.head, aggs.tail: _*)
-      else df.groupBy(shadows.map(quoted): _*).agg(aggs.head, aggs.tail: _*)
-    val unpivoted = grouped.select(dirColOf(rel, shadows).as("dir"),
-      explode(array(bloomCols.map(c =>
-        struct(lit(c).as("col"), col(s"bf__$c").as("bloom"))): _*)).as("e"))
-      .select(col("dir"), col("e.col").as("col"), col("e.bloom").as("bloom"))
-      // an all-null column aggregates to a null sketch; absent rows simply
-      // degrade that (dir, col) to "keep" at probe time
-      .where(col("bloom").isNotNull)
-    val idxRel = s"_index/${rel.stripPrefix("data/")}.parquet"
-    unpivoted.write.parquet(s"$t/$idxRel")
-    idxRel
-  }
-
-  /** Equality literals per column in a resolved predicate — the probes a
-    * bloom index can answer. Only uncast columns count (a widened column
-    * hashes differently than its literal for non-integral types; stay
-    * strictly type-exact).
-    */
-  private def bloomProbes(pred: org.apache.spark.sql.catalyst.expressions.Expression,
-                          schema: org.apache.spark.sql.types.StructType): Map[String, Seq[Long]] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    val tracked = statFieldsOf(schema).map(f => f.name -> f.dataType).toMap
-    val found = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    def lits(c: String, ls: Seq[Expression]): Unit = ls.foreach {
-      case l: Literal if l.value != null && tracked.get(c).contains(l.dataType) =>
-        found += c -> XxHash64(Seq(l), 42L).eval(null).asInstanceOf[Long]
-      case _ => ()
-    }
-    def walk(e: Expression): Unit = e match {
-      case And(a, b) => walk(a); walk(b)
-      case Or(a, b) => walk(a); walk(b)
-      case EqualTo(a: AttributeReference, l) => lits(a.name, Seq(l))
-      case EqualTo(l, a: AttributeReference) => lits(a.name, Seq(l))
-      case EqualNullSafe(a: AttributeReference, l) => lits(a.name, Seq(l))
-      case EqualNullSafe(l, a: AttributeReference) => lits(a.name, Seq(l))
-      case In(a: AttributeReference, ls) => lits(a.name, ls)
-      case InSet(a: AttributeReference, vs) =>
-        lits(a.name, vs.toSeq.map(v => Literal(v, a.dataType)))
-      case _ => ()
-    }
-    walk(pred)
-    found.groupBy(_._1).map { case (c, hs) => c -> hs.map(_._2).distinct.toSeq }
-  }
-
-  /** Probe the bloom indexes of `entries` for the predicate's equality
-    * literals: the index parquets are read and probed EXECUTOR-side (a
-    * deserialized `util.sketch.BloomFilter` per (dir, col) row, the hash
-    * list a closure constant), so planning never pulls megabytes of
-    * sketches through the driver — only booleans come back. Returns
-    * (dir → col → hash → present).
-    */
-  private def probeBloomIndexes(spark: SparkSession, t: String,
-                                entries: Seq[Entry],
-                                probes: Map[String, Seq[Long]]): Map[String, Map[String, Map[Long, Boolean]]] = {
-    val withBloom = entries.filter(_.bloom.isDefined)
-    if (withBloom.isEmpty || probes.isEmpty) return Map.empty
-    val paths = withBloom.map(e => s"$t/${e.bloom.get}").distinct
-    val dirs = withBloom.map(_.dir).toSet
-    val cols = probes.keySet
-    import spark.implicits._
-    val rows = spark.read.parquet(paths: _*)
-      .where(col("dir").isin(dirs.toSeq: _*) && col("col").isin(cols.toSeq: _*))
-      .as[(String, String, Array[Byte])]
-      .map { case (dir, c, bytes) =>
-        val bf = org.apache.spark.util.sketch.BloomFilter
-          .readFrom(new java.io.ByteArrayInputStream(bytes))
-        (dir, c, probes(c).map(h => h -> bf.mightContainLong(h)).toMap)
-      }
-      .collect()
-    rows.groupBy(_._1).map { case (dir, rs) =>
-      dir -> rs.map(r => r._2 -> r._3).toMap
-    }
-  }
-
   /** Resolve `predicate` against the snapshot's schema by analyzing a
     * filter over an empty relation: names resolve with Spark's own
     * case-sensitivity rules and type coercion inserts the exact casts the
@@ -671,14 +536,12 @@ final case class VersionedLake(root: String) {
     * the dir); pruning is only ever an optimization, never a filter.
     */
   private def couldMatch(pred: org.apache.spark.sql.catalyst.expressions.Expression,
-                         schema: org.apache.spark.sql.types.StructType,
-                         withBloom: Boolean = false): org.apache.spark.sql.Column = {
+                         schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.graftshim.ColumnShim
     import org.apache.spark.sql.types.{DataType, StringType}
-    val fieldType = statFieldsOf(schema).map(f => f.name -> f.dataType).toMap
-    val tracked = fieldType.keySet
+    val tracked = statFieldsOf(schema).map(_.name).toSet
     def st(field: String) = col("st").getField(field)
     // A stats reference, upcast when coercion wrapped the column side (an
     // upcast is monotone and injective, so min/max commute with it).
@@ -711,19 +574,11 @@ final case class VersionedLake(root: String) {
     // genuinely-unknown cases.
     def cmp(x: Expression, l: Literal)(f: Ref => org.apache.spark.sql.Column) =
       attr(x).map(r => coalesce(r.nn > 0 && f(r), keep)).getOrElse(keep)
-    // Bloom probe for a strictly type-exact, uncast equality literal: the
-    // evaluation frame carries `bh: map<col, map<xxhash64, present>>` with
-    // probe answers; a missing col/hash degrades to keep via coalesce.
-    def bloomTest(r: Ref, l: Literal): org.apache.spark.sql.Column =
-      if (!withBloom || r.castTo.isDefined || l.value == null ||
-          !fieldType.get(r.name).contains(l.dataType)) keep
-      else coalesce(element_at(element_at(col("bh"), lit(r.name)),
-        lit(XxHash64(Seq(l), 42L).eval(null).asInstanceOf[Long])), keep)
     def rw(e: Expression): org.apache.spark.sql.Column = e match {
       case And(a, b) => rw(a) && rw(b)
       case Or(a, b)  => rw(a) || rw(b)
       case EqualTo(x, L(l)) =>
-        cmp(x, l)(r => lc(l) >= r.mn && lc(l) <= r.mx && bloomTest(r, l))
+        cmp(x, l)(r => lc(l) >= r.mn && lc(l) <= r.mx)
       case EqualTo(L(l), x) => rw(EqualTo(x, l))
       case EqualNullSafe(x, L(l)) =>
         if (l.value == null)
@@ -762,62 +617,34 @@ final case class VersionedLake(root: String) {
   }
 
   /** The entries of a snapshot that could hold rows matching `predicate`,
-    * by stats pruning. Entries without stats (pre-round-6 manifests, or
-    * `collectStats = false` commits) are always kept. Exposed for
-    * observability — `readWhere` is the reading API.
+    * by stats pruning. Entries without stats (lines of manifests written
+    * before the index) are always kept. Exposed for observability —
+    * `readWhere` is the reading API.
     */
   def candidateEntries(spark: SparkSession, zone: String, table: String,
                        predicate: org.apache.spark.sql.Column,
                        version: Option[Int] = None): Seq[VersionedLake.Entry] = {
-    val t = tablePath(zone, table)
-    val m = resolveManifest(spark, zone, table, version)
-    pruneEntries(spark, t, m, predicate)
+    pruneEntries(spark, resolveManifest(spark, zone, table, version), predicate)
   }
 
-  private def pruneEntries(spark: SparkSession, t: String, m: Manifest,
+  private def pruneEntries(spark: SparkSession, m: Manifest,
                            predicate: org.apache.spark.sql.Column): Seq[Entry] = {
     import org.apache.spark.sql.types.{DataType, StructType}
     val schema = m.schemaJson
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-    val indexed = m.entries.filter(e => e.stats.isDefined || e.bloom.isDefined)
-    if (schema.isEmpty || indexed.isEmpty) return m.entries
+    val (withS, withoutS) = m.entries.partition(_.stats.isDefined)
+    if (schema.isEmpty || withS.isEmpty) return m.entries
     val resolved = resolvedPredicate(spark, schema.get, predicate)
     if (resolved.isEmpty) return m.entries
-    val sSchema = statsSchema(schema.get)
     import spark.implicits._
-    // Pass 1 — manifest-local min/max stats (no IO beyond the manifest).
-    val (withS, withoutS) = m.entries.partition(_.stats.isDefined)
-    val cond1 = couldMatch(resolved.get, schema.get)
-    val keep1 =
-      if (withS.isEmpty) Set.empty[Int]
-      else withS.zipWithIndex.map { case (e, i) => (i, e.stats.get) }
-        .toDF("__i", "__s")
-        .select(col("__i"), from_json(col("__s"), sSchema, statsJsonOpts).as("st"))
-        .where(cond1).select("__i").collect().map(_.getInt(0)).toSet
-    val pass1 = withoutS ++ withS.zipWithIndex.collect {
-      case (e, i) if keep1(i) => e
-    }
-    // Pass 2 — bloom probes for the predicate's equality literals, only
-    // over pass-1 survivors that carry an index (so sketches are read for
-    // as few dirs as possible). The full could-match re-evaluates with
-    // both stats and probe answers, which keeps AND/OR semantics exact.
-    val probes = bloomProbes(resolved.get, schema.get)
-    val bloomable = pass1.filter(_.bloom.isDefined)
-    if (probes.isEmpty || bloomable.isEmpty) return pass1
-    val hits = probeBloomIndexes(spark, t, bloomable, probes)
-    val cond2 = couldMatch(resolved.get, schema.get, withBloom = true)
-    val rows = pass1.zipWithIndex
-      .filter(_._1.bloom.isDefined)
-      .map { case (e, i) =>
-        (i, e.stats.orNull, hits.getOrElse(e.dir, Map.empty[String, Map[Long, Boolean]]))
-      }
-    val keep2 = rows.toDF("__i", "__s", "bh")
-      .select(col("__i"), from_json(col("__s"), sSchema, statsJsonOpts).as("st"),
-        col("bh"))
-      .where(cond2).select("__i").collect().map(_.getInt(0)).toSet
-    pass1.zipWithIndex.collect {
-      case (e, i) if e.bloom.isEmpty || keep2(i) => e
-    }
+    // Manifest-local min/max stats: no IO beyond the manifest.
+    val keep = withS.zipWithIndex.map { case (e, i) => (i, e.stats.get) }
+      .toDF("__i", "__s")
+      .select(col("__i"),
+        from_json(col("__s"), statsSchema(schema.get), statsJsonOpts).as("st"))
+      .where(couldMatch(resolved.get, schema.get))
+      .select("__i").collect().map(_.getInt(0)).toSet
+    withoutS ++ withS.zipWithIndex.collect { case (e, i) if keep(i) => e }
   }
 
   private def resolveManifest(spark: SparkSession, zone: String,
@@ -872,7 +699,7 @@ final case class VersionedLake(root: String) {
     val t = tablePath(zone, table)
     val m = resolveManifest(spark, zone, table, version)
     require(m.entries.nonEmpty, s"empty manifest for $zone/$table")
-    val pruned = pruneEntries(spark, t, m, predicate)
+    val pruned = pruneEntries(spark, m, predicate)
     if (pruned.isEmpty)
       // schema-correct empty result; limit(0) collapses to an empty
       // relation before any file is touched
@@ -891,10 +718,7 @@ final case class VersionedLake(root: String) {
   def upsert(spark: SparkSession, zone: String, table: String,
              updates: DataFrame, key: String, versionCol: String,
              deleteCol: Option[String] = None,
-             partitionCols: Seq[String] = Nil,
-             collectStats: Boolean = true,
-             bloomCols: Seq[String] = Nil,
-             bloomExpectedItems: Long = 1000000L): Int = retryingCommit(MaxCommitAttempts) {
+             partitionCols: Seq[String] = Nil): Int = retryingCommit(MaxCommitAttempts) {
     import org.apache.spark.sql.expressions.Window
     val t = tablePath(zone, table)
     val manifest = currentManifest(spark, zone, table, partitionCols)
@@ -926,14 +750,12 @@ final case class VersionedLake(root: String) {
     // New dirs for surviving touched partitions; a fully-deleted partition
     // simply has no entry in the new manifest. Data dirs are immutable, so
     // no checkpoint pin is needed — we never overwrite what we read.
-    val newEntries = writeDataCommit(t, result, partitionCols, collectStats,
-      bloomCols, bloomExpectedItems)
-    val entries = carried ++ newEntries
+    val entries = carried ++ writeDataCommit(t, result, partitionCols)
     // Everything deleted → pin the schema with one empty unpartitioned dir
     // (key "" never matches a real partition key, so it just carries).
     val finalEntries =
       if (entries.nonEmpty) entries
-      else writeDataCommit(t, result.limit(0), Nil, collectStats)
+      else writeDataCommit(t, result.limit(0), Nil)
     val v = manifest.version + 1
     // result.schema is the UNION of carried and new columns (unionByName
     // allowMissingColumns), so carried dirs read back with any column this
@@ -944,7 +766,7 @@ final case class VersionedLake(root: String) {
   }
 
   /** Predicate DELETE committed as a new snapshot, rewriting ONLY the data
-    * dirs whose skipping stats (and bloom indexes) admit a match — the
+    * dirs whose skipping stats admit a match — the
     * GDPR-shaped operation: deleting one user from a 100 TB table reads
     * and rewrites the handful of dirs that can contain them; every other
     * entry is carried forward VERBATIM (same files, zero bytes moved), and
@@ -957,17 +779,14 @@ final case class VersionedLake(root: String) {
     * record of the request. Returns the committed version.
     */
   def delete(spark: SparkSession, zone: String, table: String,
-             predicate: org.apache.spark.sql.Column,
-             collectStats: Boolean = true,
-             bloomCols: Seq[String] = Nil,
-             bloomExpectedItems: Long = 1000000L): Int =
-    rewriteMatching(spark, zone, table, predicate, Set.empty, collectStats,
-      bloomCols, bloomExpectedItems)(_.where(!coalesce(predicate, lit(false))))
+             predicate: org.apache.spark.sql.Column): Int =
+    rewriteMatching(spark, zone, table, predicate, Set.empty)(
+      _.where(!coalesce(predicate, lit(false))))
 
   /** Predicate UPDATE committed as a new snapshot — `set` maps column
     * names to replacement expressions, applied to rows where `predicate`
     * is TRUE (NULL/FALSE rows pass through untouched, SQL UPDATE
-    * semantics). The same stats/bloom prune as [[delete]] bounds the
+    * semantics). The same stats prune as [[delete]] bounds the
     * rewrite: only dirs that can hold matching rows are read and
     * rewritten; the rest carry verbatim. Updated columns cast back to
     * their declared dtype so the snapshot schema is invariant. Caveat:
@@ -981,13 +800,9 @@ final case class VersionedLake(root: String) {
     */
   def update(spark: SparkSession, zone: String, table: String,
              predicate: org.apache.spark.sql.Column,
-             set: Map[String, org.apache.spark.sql.Column],
-             collectStats: Boolean = true,
-             bloomCols: Seq[String] = Nil,
-             bloomExpectedItems: Long = 1000000L): Int = {
+             set: Map[String, org.apache.spark.sql.Column]): Int = {
     require(set.nonEmpty, "update requires at least one assignment")
-    rewriteMatching(spark, zone, table, predicate, set.keySet, collectStats,
-        bloomCols, bloomExpectedItems) { rows =>
+    rewriteMatching(spark, zone, table, predicate, set.keySet) { rows =>
       val schema = rows.schema
       set.keys.foreach(c => require(schema.fieldNames.contains(c),
         s"unknown column '$c' in update assignment"))
@@ -1007,8 +822,7 @@ final case class VersionedLake(root: String) {
     */
   private def rewriteMatching(spark: SparkSession, zone: String, table: String,
                               predicate: org.apache.spark.sql.Column,
-                              assigned: Set[String], collectStats: Boolean,
-                              bloomCols: Seq[String], bloomExpectedItems: Long)(
+                              assigned: Set[String])(
       rewrite: DataFrame => DataFrame): Int = retryingCommit(MaxCommitAttempts) {
     val t = tablePath(zone, table)
     val m = resolveManifest(spark, zone, table, None)
@@ -1018,17 +832,16 @@ final case class VersionedLake(root: String) {
         s"cannot assign partition column '$c' — delete + re-insert moves " +
           "rows between partitions explicitly")
     }
-    val candidates = pruneEntries(spark, t, m, predicate)
+    val candidates = pruneEntries(spark, m, predicate)
     val entries =
       if (candidates.isEmpty) m.entries
       else {
         val dirs = candidates.map(_.dir).toSet
         val rewritten = rewrite(readDirs(spark, t, candidates, m.schemaJson))
         val kept = m.entries.filterNot(e => dirs.contains(e.dir)) ++
-          writeDataCommit(t, rewritten, m.partitionCols, collectStats,
-            bloomCols, bloomExpectedItems)
+          writeDataCommit(t, rewritten, m.partitionCols)
         if (kept.nonEmpty) kept
-        else writeDataCommit(t, rewritten.limit(0), Nil, collectStats)
+        else writeDataCommit(t, rewritten.limit(0), Nil)
       }
     commitManifest(spark, t, m.version + 1, m.partitionCols, entries,
       m.schemaJson, m.txns)
@@ -1156,7 +969,6 @@ final case class VersionedLake(root: String) {
                      delta: DataFrame, keys: Seq[String],
                      sumCols: Seq[String],
                      partitionCols: Seq[String] = Nil,
-                     collectStats: Boolean = true,
                      txn: Option[(String, Long)] = None): Int = retryingCommit(MaxCommitAttempts) {
     require(partitionCols.forall(keys.contains),
       "partitionCols must be group keys, or groups would span partitions")
@@ -1176,9 +988,9 @@ final case class VersionedLake(root: String) {
         .agg(sumCols.head -> "sum", sumCols.tail.map(_ -> "sum"): _*)
         .toDF(keys ++ sumCols: _*)
       requireNoRetype(manifest, folded.schema, zone, table, "mergeAggregate")
-      val newEntries = writeDataCommit(t, folded, partitionCols, collectStats)
       val v = manifest.version + 1
-      commitManifest(spark, t, v, partitionCols, carried ++ newEntries,
+      commitManifest(spark, t, v, partitionCols,
+        carried ++ writeDataCommit(t, folded, partitionCols),
         Some(folded.schema.json), manifest.txns ++ txn)
       v
     }
@@ -1195,11 +1007,7 @@ final case class VersionedLake(root: String) {
     * through a single writer task.
     */
   def compact(spark: SparkSession, zone: String, table: String,
-              filesPerPartition: Int,
-              collectStats: Boolean = true,
-              bloomCols: Seq[String] = Nil,
-              bloomExpectedItems: Long = 1000000L): Int =
-      retryingCommit(MaxCommitAttempts) {
+              filesPerPartition: Int): Int = retryingCommit(MaxCommitAttempts) {
     require(filesPerPartition > 0)
     val t = tablePath(zone, table)
     val m = resolveManifest(spark, zone, table, None)
@@ -1218,8 +1026,7 @@ final case class VersionedLake(root: String) {
           .sortWithinPartitions(m.partitionCols.map(col): _*)
           .drop("__salt")
       }
-    val entries = writeDataCommit(t, sized, m.partitionCols, collectStats,
-      bloomCols, bloomExpectedItems)
+    val entries = writeDataCommit(t, sized, m.partitionCols)
     val v = m.version + 1
     commitManifest(spark, t, v, m.partitionCols, entries,
       Some(df.schema.json), m.txns)
@@ -1237,7 +1044,7 @@ final case class VersionedLake(root: String) {
     * makes the stats index effective for more than one filter column.
     *
     * Slice boundaries come from one approxQuantile sketch of the z-key
-    * (`sampleFraction` < 1 samples it); the rewrite is one shuffle on
+    * (four bits per column); the rewrite is one shuffle on
     * (partition cols, slice) with rows sorted along the curve inside each
     * task, so parquet row-group stats are tight too. Readers of prior
     * versions are unaffected; a later upsert that touches a partition
@@ -1245,11 +1052,7 @@ final case class VersionedLake(root: String) {
     * until the next optimize, exactly like Delta).
     */
   def optimizeZOrder(spark: SparkSession, zone: String, table: String,
-                     zCols: Seq[String], slicesPerPartition: Int = 8,
-                     bitsPerCol: Int = 4, sampleFraction: Double = 1.0,
-                     collectStats: Boolean = true,
-                     bloomCols: Seq[String] = Nil,
-                     bloomExpectedItems: Long = 1000000L): Int =
+                     zCols: Seq[String], slicesPerPartition: Int = 8): Int =
       retryingCommit(MaxCommitAttempts) {
     require(zCols.nonEmpty && slicesPerPartition >= 1)
     val t = tablePath(zone, table)
@@ -1257,7 +1060,7 @@ final case class VersionedLake(root: String) {
     require(zCols.forall(c => !m.partitionCols.contains(c)),
       "z-order columns must not be partition columns (constant per dir)")
     val df = read(spark, zone, table)
-    val zkey = graft.sources.Layout.zorderKey(df, zCols, bitsPerCol, sampleFraction)
+    val zkey = graft.sources.Layout.zorderKey(df, zCols)
     val sliceCol: org.apache.spark.sql.Column =
       if (slicesPerPartition == 1) lit(0)
       else {
@@ -1274,8 +1077,8 @@ final case class VersionedLake(root: String) {
     val arranged = df
       .repartition(m.partitionCols.map(col) :+ sliceCol: _*)
       .sortWithinPartitions(m.partitionCols.map(col) :+ zkey: _*)
-    val entries = writeDataCommit(t, arranged, m.partitionCols, collectStats,
-      bloomCols, bloomExpectedItems, sliceBy = Some(sliceCol))
+    val entries = writeDataCommit(t, arranged, m.partitionCols,
+      sliceBy = Some(sliceCol))
     val v = m.version + 1
     commitManifest(spark, t, v, m.partitionCols, entries, Some(df.schema.json),
       m.txns)
@@ -1293,9 +1096,9 @@ final case class VersionedLake(root: String) {
       val m = readManifest(spark, t, v)
       (v, m.entries.size, m.entries.map(_.key).distinct.size,
         m.partitionCols.mkString(","), m.schemaJson.isDefined,
-        m.entries.count(_.stats.isDefined), m.entries.count(_.bloom.isDefined))
+        m.entries.count(_.stats.isDefined))
     }.toDF("version", "n_entries", "n_partition_keys", "partition_cols",
-      "has_schema", "n_with_stats", "n_with_bloom")
+      "has_schema", "n_with_stats")
   }
 
   /** Retention vacuum: keep the newest `retainVersions` manifests; any data
@@ -1311,39 +1114,33 @@ final case class VersionedLake(root: String) {
     val vs = versions(spark, zone, table)
     if (vs.isEmpty) return 0
     val retained = vs.takeRight(retainVersions)
-    val retainedEntries = retained
-      .flatMap(v => readManifest(spark, t, v).entries)
-    val liveDirs: Set[String] = retainedEntries.map(_.dir).toSet
-    // bloom-index parquets live exactly as long as a retained manifest
-    // references them — same rule as data dirs
-    val liveIdx: Set[String] = retainedEntries.flatMap(_.bloom).toSet
+    val live: Set[String] = retained
+      .flatMap(v => readManifest(spark, t, v).entries.map(_.dir)).toSet
     val fs = fsFor(spark, new Path(t))
     val cutoff = System.currentTimeMillis() - olderThanMs
     var deleted = 0
-    for ((root, live) <- Seq("data" -> liveDirs, "_index" -> liveIdx)) {
-      val rootPath = new Path(s"$t/$root")
-      if (fs.exists(rootPath)) {
-        val tRootLen = new Path(t).toUri.getPath.length
-        val it = fs.listFiles(rootPath, true)
-        val toDelete = ArrayBuffer.empty[Path]
-        while (it.hasNext) {
-          val f = it.next()
-          val rel = f.getPath.toUri.getPath.drop(tRootLen + 1)
-          val isLive = live.exists(d => rel.startsWith(d + "/") || {
-            // the file sits directly inside a live dir (unpartitioned entry)
-            val parent = rel.take(rel.lastIndexOf('/').max(0))
-            parent == d
-          })
-          if (!isLive && f.getModificationTime < cutoff) toDelete += f.getPath
-        }
-        toDelete.foreach { p => if (fs.delete(p, false)) deleted += 1 }
-        // sweep now-empty commit dirs (best-effort, never a live one)
-        for (s <- fs.listStatus(rootPath) if s.isDirectory) {
-          val rel = s.getPath.toUri.getPath.drop(tRootLen + 1)
-          val anyLive = live.exists(_.startsWith(rel))
-          if (!anyLive && !fs.listFiles(s.getPath, true).hasNext)
-            fs.delete(s.getPath, true)
-        }
+    val rootPath = new Path(s"$t/data")
+    if (fs.exists(rootPath)) {
+      val tRootLen = new Path(t).toUri.getPath.length
+      val it = fs.listFiles(rootPath, true)
+      val toDelete = ArrayBuffer.empty[Path]
+      while (it.hasNext) {
+        val f = it.next()
+        val rel = f.getPath.toUri.getPath.drop(tRootLen + 1)
+        val isLive = live.exists(d => rel.startsWith(d + "/") || {
+          // the file sits directly inside a live dir (unpartitioned entry)
+          val parent = rel.take(rel.lastIndexOf('/').max(0))
+          parent == d
+        })
+        if (!isLive && f.getModificationTime < cutoff) toDelete += f.getPath
+      }
+      toDelete.foreach { p => if (fs.delete(p, false)) deleted += 1 }
+      // sweep now-empty commit dirs (best-effort, never a live one)
+      for (s <- fs.listStatus(rootPath) if s.isDirectory) {
+        val rel = s.getPath.toUri.getPath.drop(tRootLen + 1)
+        val anyLive = live.exists(_.startsWith(rel))
+        if (!anyLive && !fs.listFiles(s.getPath, true).hasNext)
+          fs.delete(s.getPath, true)
       }
     }
     for (v <- vs.dropRight(retainVersions)) {

@@ -351,4 +351,23 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"),
       "marginal joins are gone — entropies come from re-aggregation")
   }
+
+  test("spread widens a one-file projection and leaves a limit unplanned") {
+    import org.apache.spark.sql.functions.col
+    val docs = sources.Tables.load(spark, dir, "documents")
+    val narrow = docs.select(col("doc_id"), col("text"))
+      .where(col("doc_id") > 0)
+    assert(narrow.rdd.getNumPartitions * 2 <
+      spark.sparkContext.defaultParallelism, "fixture must be under-split")
+    val widened = operators.Pinning.spread(narrow, col("doc_id"))
+    assert(widened.rdd.getNumPartitions ===
+      spark.sparkContext.defaultParallelism)
+    // a limit plans an exchange: inspecting its partitions would run an
+    // adaptive stage while the frame is built
+    val limited = docs.limit(5)
+    val (got, jobs) = JobCount.of(spark)(
+      operators.Pinning.spread(limited, col("doc_id")))
+    assert(jobs === 0, "spread ran a job on a limit plan")
+    assert(got eq limited, "spread rewrote a limit plan")
+  }
 }

@@ -699,12 +699,12 @@ class StatsSpec extends AnyFunSuite {
     // p = [.005, .01, .03, .04], n = 4 → raw p·n/rank = [.02, .02, .04, .04]
     val rows = Seq((1L, 0.01), (2L, 0.04), (3L, 0.03), (4L, 0.005))
       .toDF("id", "p")
-    val got = Stats.bhAdjust(rows, "id", "p").orderBy("rank").collect()
+    val got = Stats.bhFdr(rows, "id", "p").orderBy("rank").collect()
     assert(got.map(_.getAs[Long]("rank")).toSeq === Seq(1L, 2L, 3L, 4L))
-    val qs = got.map(_.getAs[Double]("q_value")).toSeq
+    val qs = got.map(_.getAs[Double]("p_adj")).toSeq
     assert(qs.zip(Seq(0.02, 0.02, 0.04, 0.04))
       .forall { case (a, b) => d(a, b) })
-    assert(got.forall(_.getAs[Boolean]("significant")))
+    assert(got.forall(_.getAs[Boolean]("rejected")))
     // monotone in rank by construction
     assert(qs === qs.sorted)
   }
@@ -712,10 +712,10 @@ class StatsSpec extends AnyFunSuite {
   test("bhAdjust: q clamps at 1 and big late p's don't rescue early ones") {
     val rows = Seq((1L, 0.001), (2L, 0.9), (3L, 0.95), (4L, 1.0))
       .toDF("id", "p")
-    val got = Stats.bhAdjust(rows, "id", "p").orderBy("rank").collect()
-    assert(d(got.head.getAs[Double]("q_value"), 0.004)) // 0.001·4/1
-    assert(got.last.getAs[Double]("q_value") === 1.0)
-    assert(got.count(_.getAs[Boolean]("significant")) === 1)
+    val got = Stats.bhFdr(rows, "id", "p").orderBy("rank").collect()
+    assert(d(got.head.getAs[Double]("p_adj"), 0.004)) // 0.001·4/1
+    assert(got.last.getAs[Double]("p_adj") === 1.0)
+    assert(got.count(_.getAs[Boolean]("rejected")) === 1)
   }
 
   test("quantileTreatmentEffects: constant shift shows at every decile") {

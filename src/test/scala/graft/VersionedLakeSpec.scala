@@ -755,9 +755,15 @@ class VersionedLakeSpec extends AnyFunSuite {
 
   test("data skipping degrades conservatively: no stats, long strings, evolved columns") {
     val vl = newLake()
-    // collectStats=false → entries carry no stats → no pruning, reads correct
-    vl.write(Seq(("p1", 1L), ("p2", 200L)).toDF("p", "id"), "silver", "nostat",
-      partitionCols = Seq("p"), collectStats = false)
+    // entries without stats (manifest lines older than the index) → no
+    // pruning, reads correct
+    val ns = Seq(("p1", 1L), ("p2", 200L)).toDF("p", "id")
+    vl.write(ns, "silver", "nostat", partitionCols = Seq("p"))
+    vl.commitManifest(spark, vl.tablePath("silver", "nostat"), 2, Seq("p"),
+      vl.candidateEntries(spark, "silver", "nostat", lit(true))
+        .map(_.copy(stats = None)), Some(ns.schema.json), Map.empty)
+    assert(vl.candidateEntries(spark, "silver", "nostat", col("id") > 100)
+      .forall(_.stats.isEmpty))
     assert(vl.candidateEntries(spark, "silver", "nostat", col("id") > 100).size === 2)
     assert(vl.readWhere(spark, "silver", "nostat", col("id") > 100).count() === 1)
     // >64-char strings: min/max dropped (NOT truncated — a truncated max
@@ -783,6 +789,77 @@ class VersionedLakeSpec extends AnyFunSuite {
       .select("id").as[Long].collect().toSeq === Seq(2L))
   }
 
+  test("data skipping: a manifest line carrying a bloom= sidecar field " +
+    "parses to the same key, dir and stats") {
+    val vl = newLake()
+    val df = Seq(("p1", 1L), ("p2", 200L)).toDF("p", "id")
+    vl.write(df, "silver", "legacy", partitionCols = Seq("p"))
+    def shape() = vl.candidateEntries(spark, "silver", "legacy", lit(true))
+      .map(e => (e.key, e.dir, e.stats)).sortBy(_._1)
+    val before = shape()
+    // older manifests appended `\tbloom=<relpath>` to an entry line, after
+    // its stats or, on a stats-less line, straight after the dir
+    val mp = new org.apache.hadoop.fs.Path(
+      s"${vl.tablePath("silver", "legacy")}/_manifests/v00000001.manifest")
+    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
+    val lines = scala.io.Source.fromInputStream(fs.open(mp), "UTF-8")
+      .mkString.split("\n").toSeq.map {
+        case l if l.startsWith("p1\t") => s"$l\tbloom=_index/gone-1.parquet"
+        case l if l.startsWith("p2\t") =>
+          l.substring(0, l.indexOf("\tstats=")) + "\tbloom=_index/gone-2.parquet"
+        case l => l
+      }
+    fs.delete(mp, false)
+    val out = fs.create(mp, true)
+    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    finally out.close()
+    assert(shape() === before.map {
+      case (k, d, _) if k == "p2" => (k, d, None)
+      case e => e
+    })
+    assert(vl.read(spark, "silver", "legacy").select("id").as[Long]
+      .collect().sorted.toSeq === Seq(1L, 200L))
+    // the stats-less p2 line stays a candidate; p1's stats still prune
+    for (pred <- Seq(col("id") === 200L, col("id") > 100)) {
+      assert(vl.candidateEntries(spark, "silver", "legacy", pred)
+        .map(_.key) === Seq("p2"), s"candidates for $pred")
+      assert(vl.readWhere(spark, "silver", "legacy", pred).select("id")
+        .as[Long].collect().toSeq === Seq(200L), s"rows for $pred")
+    }
+  }
+
+  test("data skipping: every commit path publishes stats on every new entry") {
+    val vl = newLake()
+    def entries() = vl.candidateEntries(spark, "silver", "st", lit(true))
+    val paths: Seq[(String, () => Int)] = Seq(
+      "write" -> (() => vl.write(Seq(("a", 1L, 1L), ("b", 2L, 1L))
+        .toDF("p", "k", "n"), "silver", "st", partitionCols = Seq("p"))),
+      "append" -> (() => vl.append(Seq(("c", 3L, 1L), ("c", 4L, 1L))
+        .toDF("p", "k", "n"), "silver", "st")),
+      "upsert" -> (() => vl.upsert(spark, "silver", "st",
+        Seq(("a", 1L, 2L)).toDF("p", "k", "n"), "k", "n",
+        partitionCols = Seq("p"))),
+      "mergeAggregate" -> (() => vl.mergeAggregate(spark, "silver", "st",
+        Seq(("b", 2L, 5L)).toDF("p", "k", "n"), keys = Seq("p", "k"),
+        sumCols = Seq("n"), partitionCols = Seq("p"))),
+      "delete" -> (() => vl.delete(spark, "silver", "st", col("k") === 3L)),
+      "update" -> (() => vl.update(spark, "silver", "st", col("k") === 1L,
+        Map("n" -> lit(9L)))),
+      "compact" -> (() => vl.compact(spark, "silver", "st",
+        filesPerPartition = 1)),
+      "optimizeZOrder" -> (() => vl.optimizeZOrder(spark, "silver", "st",
+        Seq("k", "n"), slicesPerPartition = 2)))
+    for ((name, commit) <- paths) {
+      val old = if (name == "write") Set.empty[String]
+        else entries().map(_.dir).toSet
+      val v = commit()
+      assert(vl.currentVersion(spark, "silver", "st") === v, s"$name committed")
+      val added = entries().filterNot(e => old.contains(e.dir))
+      assert(added.nonEmpty, s"$name wrote no entry")
+      assert(added.forall(_.stats.isDefined), s"$name published a stats-less entry")
+    }
+  }
+
   test("data skipping: timestamp stats keep microsecond precision at range boundaries") {
     val vl = newLake()
     // partition q1 tops out at .123456 µs — a stats index that rounds to
@@ -798,75 +875,6 @@ class VersionedLakeSpec extends AnyFunSuite {
     // and the µs bound still PRUNES what it can: strictly-greater probe
     val above = col("ts") > lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00.123456"))
     assert(vl.candidateEntries(spark, "silver", "micro", above).map(_.key) === Seq("q2"))
-  }
-
-  test("bloom index: point lookups prune dirs min/max stats cannot") {
-    val vl = newLake()
-    // keys interleave across partitions: every partition's [min,max] spans
-    // the whole range, so stats alone can never prune a point probe
-    val df = spark.range(0, 300).select(
-      (col("id") % 3).cast("string").as("p"),
-      concat(lit("k"), format_string("%04d", col("id"))).as("k"),
-      col("id").as("v"))
-    vl.write(df, "silver", "bloomed", partitionCols = Seq("p"),
-      bloomCols = Seq("k"), bloomExpectedItems = 1000L)
-    // every key lands in exactly one partition (id % 3) — the bloom must
-    // cut candidates to (whp) that one dir, and NEVER lose the true one
-    for (id <- Seq(0, 1, 2, 7, 151, 299)) {
-      val key = f"k$id%04d"
-      val cand = vl.candidateEntries(spark, "silver", "bloomed",
-        col("k") === key)
-      assert(cand.map(_.key).contains((id % 3).toString),
-        s"bloom pruned the dir that HOLDS $key")
-      assert(cand.size <= 2, s"bloom barely pruned for $key: ${cand.map(_.key)}")
-      val got = vl.readWhere(spark, "silver", "bloomed", col("k") === key)
-        .select("v").as[Long].collect().toSeq
-      assert(got === Seq(id.toLong), s"wrong rows for $key")
-    }
-    // an absent key can prune to zero dirs, and reads empty with schema
-    val none = vl.readWhere(spark, "silver", "bloomed", col("k") === "nope")
-    assert(none.count() === 0 && none.columns.toSet === Set("p", "k", "v"))
-    // IN over two partitions keeps (whp) exactly those; OR with a range
-    // composes with the stats pass conservatively
-    val in2 = vl.candidateEntries(spark, "silver", "bloomed",
-      col("k").isin("k0000", "k0001"))
-    assert(Set("0", "1").subsetOf(in2.map(_.key).toSet) && in2.size <= 3)
-    val got2 = vl.readWhere(spark, "silver", "bloomed",
-        col("k") === "k0000" || col("v") >= 298)
-      .select("v").as[Long].collect().sorted.toSeq
-    assert(got2 === Seq(0L, 298L, 299L))
-  }
-
-  test("bloom index: carried forward by upsert, swept by vacuum only when unreferenced") {
-    val vl = newLake()
-    val base = Seq(("a", "u1", 1L), ("b", "u2", 1L), ("c", "u3", 1L))
-      .toDF("p", "k", "ver")
-    vl.write(base, "silver", "bcarry", partitionCols = Seq("p"),
-      bloomCols = Seq("k"), bloomExpectedItems = 100L)
-    // touch only partition a; b and c carry their bloom refs verbatim
-    vl.upsert(spark, "silver", "bcarry",
-      Seq(("a", "u9", 1L)).toDF("p", "k", "ver"), "k", "ver",
-      partitionCols = Seq("p"), bloomCols = Seq("k"),
-      bloomExpectedItems = 100L)
-    val cand = vl.candidateEntries(spark, "silver", "bcarry", col("k") === "u3")
-    assert(cand.map(_.key) === Seq("c"), s"carried bloom did not prune: $cand")
-    assert(vl.readWhere(spark, "silver", "bcarry", col("k") === "u2")
-      .count() === 1)
-    // vacuum with retain=1: v1's index is still referenced by v2's carried
-    // entries, so it must survive; probing still works after the sweep
-    val t = new org.apache.hadoop.fs.Path(vl.tablePath("silver", "bcarry"))
-    val fs = t.getFileSystem(spark.sessionState.newHadoopConf())
-    val it = fs.listFiles(t, true)
-    while (it.hasNext) {
-      val f = it.next()
-      fs.setTimes(f.getPath, System.currentTimeMillis() - 3600 * 1000L, -1)
-    }
-    vl.vacuum(spark, "silver", "bcarry", retainVersions = 1,
-      olderThanMs = 60 * 1000L)
-    assert(vl.candidateEntries(spark, "silver", "bcarry", col("k") === "u3")
-      .map(_.key) === Seq("c"))
-    assert(vl.readWhere(spark, "silver", "bcarry", col("k") === "u3")
-      .count() === 1)
   }
 
   test("optimizeZOrder: slices give dir-level pruning on BOTH z columns") {
