@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.lang.management.ManagementFactory
+import org.apache.spark.metrics.source.CodegenMetrics
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every `SparkEntry.queries` entry against
@@ -28,9 +29,13 @@ import scala.jdk.CollectionConverters._
   *     final time is still >5x its prior is emitted under "contention"
   *     with that evidence so the judge can discount host noise vs code;
   *   - a top-level "host" block (load average, the machine's cores, the
-  *     session's `local_cores`, total GC) timestamping the run's
-  *     environment; the previous mirror is a prior only when its sf
-  *     directory and `local_cores` equal this run's.
+  *     session's `local_cores`, total GC, the sweep's Janino compiles)
+  *     timestamping the run's environment; the previous mirror is a prior
+  *     only when its sf directory and `local_cores` equal this run's;
+  *   - "warm_compiles": every query whose second (warm) run still compiled
+  *     generated classes, with the count — a query that regenerates its
+  *     code on every run (say, a loop that inlines per-round literals)
+  *     shows up by name instead of as a slow time.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -100,8 +105,10 @@ object Bench {
     // error lands in the "errors" field — a regression that breaks a query
     // must read as a failure, not a speedup.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // name -> (wallSec, effectiveCores, gcDeltaSec, runsUsed)
-    case class Run(wall: Double, cores: Double, gc: Double)
+    // Janino compilations so far in this JVM (the cache misses)
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // one timed run: wall seconds, effective cores, GC seconds, Janino compiles
+    case class Run(wall: Double, cores: Double, gc: Double, compiles: Long)
     val contention = scala.collection.mutable.LinkedHashMap[String, (Run, Double, Int)]()
     // `record=false` for every run AFTER a valid first time (second/third
     // sweep runs, adjudication re-times): a transient failure there must
@@ -110,25 +117,28 @@ object Bench {
     // dual: a timed query never carries an error entry.
     def timeOnce(name: String, fn: (SparkSession, String) => DataFrame,
                  record: Boolean = true): Run = {
-      val (c0, g0, t0) = (processCpuSec, gcSec, System.nanoTime())
+      val (c0, g0, j0, t0) = (processCpuSec, gcSec, compiles, System.nanoTime())
       try {
         fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
         val cores = if (c0 >= 0 && wall > 0) (processCpuSec - c0) / wall else -1.0
-        Run(wall, cores, gcSec - g0)
+        Run(wall, cores, gcSec - g0, compiles - j0)
       } catch { case e: Throwable =>
         if (record)
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
             .replaceAll("[\\\\\"\\n\\r]", " ").take(200)
-        Run(-1.0, -1.0, 0.0)
+        Run(-1.0, -1.0, 0.0, 0L)
       }
     }
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val warmCompiles = scala.collection.mutable.LinkedHashMap[String, Long]()
+    val sweepCompiles0 = compiles
     SparkEntry.queries.foreach { case (name, fn) =>
       val a = timeOnce(name, fn)
       if (a.wall < 0) results(name) = a.wall
       else {
         val b = timeOnce(name, fn, record = false)
+        if (b.wall >= 0 && b.compiles > 0) warmCompiles(name) = b.compiles
         var best = if (b.wall >= 0 && b.wall < a.wall) b else a
         var runs = 2
         val prior = prevTimes.getOrElse(name, -1.0)
@@ -144,6 +154,7 @@ object Bench {
         results(name) = best.wall
       }
     }
+    val sweepCompiles = compiles - sweepCompiles0
     // Self-adjudicating regression tripwire: any query the diff against
     // the previous mirror would flag (>= 0.5 s slower) is re-timed in
     // ISOLATION — min-of-3 fresh runs after the sweep, nothing else in
@@ -188,14 +199,15 @@ object Bench {
     val host = {
       val load = osBean.getSystemLoadAverage
       val cores = Runtime.getRuntime.availableProcessors
-      f"""{\"load_avg\":$load%.2f,\"cores\":$cores%d,\"local_cores\":$cpus,\"gc_total_sec\":$gcSec%.1f}"""
+      f"""{\"load_avg\":$load%.2f,\"cores\":$cores%d,\"local_cores\":$cpus,\"gc_total_sec\":$gcSec%.1f,\"codegen_compiles\":$sweepCompiles%d}"""
     }
+    val warm = warmCompiles.map { case (k, n) => s"\"$k\":$n" }.mkString("{", ",", "}")
     // headline fields LAST: the driver keeps only the tail of long output,
     // so leading with the per-query map means a truncated capture loses
     // detail, never the total (r8/r9's BENCH artifacts lost the total)
     val setup = f"""{\"bikeshare_warehouse_sec\":$setupSec%.2f}"""
     val json =
-      s"""{"queries":$qs,"sf":"$sfDir","regressions":$regs,"contention":$cont,"setup":$setup,"host":$host,"metric":"total","unit":"sec","errors":$errs,"value":$total}"""
+      s"""{"queries":$qs,"sf":"$sfDir","regressions":$regs,"contention":$cont,"setup":$setup,"warm_compiles":$warm,"host":$host,"metric":"total","unit":"sec","errors":$errs,"value":$total}"""
     println(json)
     // belt and braces: mirror the full JSON to a file the judge can read
     // even if stdout is truncated entirely

@@ -13,6 +13,18 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
+  /** Entries of Spark's generated-class cache (`CodeGenerator`'s, keyed by
+    * the generated source; it holds compiled classes, never data or
+    * results). Spark's default of 100 is below one pass of the engine's
+    * queries, and the cache evicts per segment (4 segments of cap/4), so
+    * at 100 almost nothing survives a pass: every warm pass of the
+    * benchmark compiled again with Janino, 178 classes per operator-mix
+    * pass (q36b alone ~50, q97 ~45, q39d ~35) and 240 per bikeshare pass
+    * (22 queries plus the lake ops). At 2,000 a warm pass of either
+    * compiles none (measured on 4 cores, `local[4]`).
+    */
+  val CodegenCacheEntries = 2000
+
   /** Apply engine config onto an existing builder (used by Verify/Bench and
     * test sessions so every entry point agrees on semantics).
     */
@@ -41,6 +53,16 @@ object Engine {
     // field id; the reader only matches by id when the requested schema
     // carries parquet.field.id metadata, so other reads are unchanged.
     .config("spark.sql.parquet.fieldId.read.enabled", "true")
+    // Static and JVM-wide: the cache is sized once, from the conf of the
+    // first session that generates code, so only a session built here
+    // gets it.
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    // The whole-stage class name otherwise ends in the codegen stage id,
+    // which adaptive execution assigns in the order query stages are
+    // created — a timing-dependent order (q21/q22's joins swap stages 4
+    // and 5 between runs), so the same pipeline under another number
+    // missed the cache: 4 recompiles in a warm pass of each workload.
+    .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Cores for local sessions: the harness machine exposes 32; cap there so
     * CI-sized boxes still work. Overridable via SPARK_GRAFT_CPUS.

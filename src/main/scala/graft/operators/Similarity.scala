@@ -941,8 +941,16 @@ object Similarity {
                    vecCol: String, k: Int = 4, threshold: Double = 1.0,
                    maxRows: Int = 20000): DataFrame = {
     require(k >= 1, s"k must be ≥ 1: $k")
-    Seq(("src", src), ("tgt", tgt)).foreach { case (side, df) =>
-      require(df.limit(maxRows + 1).count() <= maxRows,
+    // both size guards in one action: each side limited to maxRows + 1,
+    // tagged, and counted per tag
+    val sides = Seq("src" -> src, "tgt" -> tgt)
+    val sideRows = sides
+      .map { case (side, df) => df.limit(maxRows + 1).select(lit(side).as("__side")) }
+      .reduce(_ union _)
+      .groupBy("__side").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    sides.foreach { case (side, _) =>
+      require(sideRows.getOrElse(side, 0L) <= maxRows,
         s"marginMining is an exact all-pairs anchor bounded at " +
           s"maxRows=$maxRows, but the $side side exceeds it — slice the " +
           s"input or mine candidates with ivfTopK and re-score.")

@@ -264,7 +264,13 @@ object Stats {
     Pinning.unpin(rt0)
     val classes = rt.select(col("__k").as("__c")).distinct()
       .localCheckpoint(eager = true) // C rows; broadcast every round
-    val cCnt = classes.count()
+    // the widest label in the same action as the count (bytes, for the
+    // M-table estimate below)
+    val cStats = classes
+      .agg(count(lit(1)), coalesce(max(octet_length(col("__c"))), lit(0)))
+      .collect().head
+    val cCnt = cStats.getLong(0)
+    val kBytes = cStats.getInt(1).toLong
     require(cCnt <= maxClasses,
       s"dawidSkene is a bounded-label-domain operator, but the input has " +
         s"$cCnt distinct labels (> maxClasses=$maxClasses). Collapse the " +
@@ -276,20 +282,24 @@ object Stats {
     // den confusion tables are ≤ raters·C² rows — broadcast them onto the
     // exploded scan when that bound is comfortably broadcastable,
     // otherwise shuffle-hash-join (never a sort) at corpus scale.
-    val nRaters = rt.select("__r").distinct().count()
+    // the widest string rater id in the same action as the rater count
+    val rIsString = rt.schema("__r").dataType == org.apache.spark.sql.types.StringType
+    val rStats = rt.select("__r").distinct()
+      .agg(count(lit(1)), coalesce(max(
+        if (rIsString) octet_length(col("__r")) else lit(0)), lit(0)))
+      .collect().head
+    val nRaters = rStats.getLong(0)
     // bounded in BYTES as well as rows: near the row bound a
     // string-labeled confusion table is hundreds of MB framed (the driver
     // and every executor hold the built relation, twice per round as num
-    // and den) — estimate row width from the actual key types (strings at
-    // 48 bytes, scalars 16, plus struct/map overhead) and require the
-    // table under a 64 MB broadcast budget.
+    // and den) — estimate row width from the measured keys (a string
+    // takes its widest value's bytes, word-aligned, plus a 16-byte slot;
+    // a scalar 16; plus struct/map overhead) and require the table under
+    // a 64 MB broadcast budget.
     val mRows = nRaters * cCnt * cCnt
-    def fieldWidth(dt: org.apache.spark.sql.types.DataType): Long = dt match {
-      case org.apache.spark.sql.types.StringType => 48L
-      case _ => 16L
-    }
-    val mBytes = mRows * (24L + fieldWidth(rt.schema("__r").dataType) +
-      2L * fieldWidth(rt.schema("__k").dataType) + 16L)
+    def stringWidth(maxBytes: Long): Long = 16L + (maxBytes + 7) / 8 * 8
+    val rWidth = if (rIsString) stringWidth(rStats.getInt(1).toLong) else 16L
+    val mBytes = mRows * (24L + rWidth + 2L * stringWidth(kBytes) + 16L)
     val mSmall = mRows <= 4000000L && mBytes <= 64L * 1024 * 1024
     def mHint(d: DataFrame): DataFrame =
       if (mSmall) broadcast(d) else d.hint("shuffle_hash")

@@ -559,6 +559,21 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("marginMining: the size guard names the side over maxRows and admits exactly maxRows") {
+    def side(ids: Seq[Long]) = ids.map(i => (i, Array(1.0f, i.toFloat))).toDF("vec_id", "embedding")
+    val (a, b, big) = (side(Seq(0L, 1L)), side(Seq(2L, 3L)), side(10L until 13L))
+    val srcEx = intercept[IllegalArgumentException] {
+      Similarity.marginMining(big, b, "vec_id", "embedding", maxRows = 2)
+    }
+    assert(srcEx.getMessage.contains("maxRows=2, but the src side exceeds it"))
+    val tgtEx = intercept[IllegalArgumentException] {
+      Similarity.marginMining(a, big, "vec_id", "embedding", maxRows = 2)
+    }
+    assert(tgtEx.getMessage.contains("maxRows=2, but the tgt side exceeds it"))
+    assert(Similarity.marginMining(a, b, "vec_id", "embedding", k = 1,
+      threshold = 0.0, maxRows = 2).count() === 2)
+  }
+
   test("mutualKnn: only reciprocated pairs survive, emitted once with both ranks") {
     val nbrs = Seq(
       (1L, 2L, 0.9, 1), (2L, 1L, 0.9, 2),  // mutual

@@ -1011,6 +1011,59 @@ class StatsSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("maxClasses"))
   }
 
+  test("dawidSkene: long string labels push the M tables past the broadcast budget to a shuffle-hash join") {
+    // 400 raters × 10² labels = 40,000 M-table rows. With ~1 KB labels the
+    // measured row width puts them near 84 MB (over the 64 MB budget); a
+    // flat per-string width would put them near 6 MB and broadcast them.
+    val shortLabels = (0 until 10).map(c => s"l$c")
+    val longLabels = shortLabels.map(l => l + "x" * 1000)
+    // item i's truth is i % 10; one rater in 40 answers one class off
+    val rows = for (r <- 0 until 400; i <- Seq(r % 20, (r + 7) % 20))
+      yield (i.toLong, r, if (r % 40 == 3) (i + 1) % 10 else i % 10)
+    def run(labels: Seq[String]) = {
+      import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
+      // the M-step joins run inside per-round pins, so the returned frame's
+      // plan does not hold them: capture every executed plan instead
+      val plans = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          plans.synchronized { plans += qe.executedPlan }
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      val got = try {
+        val out = Stats.dawidSkene(
+          rows.map { case (i, r, c) => (i, r, labels(c)) }.toDF("item", "rater", "label"),
+          "item", "rater", "label", iterations = 2).collect()
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        out
+      } finally spark.listenerManager.unregister(listener)
+      // the joins of the num table, the only one keyed on the label
+      def onLabel(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+        keys.exists(_.references.exists(_.name == "__k"))
+      val labelJoins = plans.synchronized(plans.toList).flatMap(p =>
+        new AdaptiveSparkPlanHelper {}.collect(p) {
+          case j: BroadcastHashJoinExec if onLabel(j.leftKeys) => "broadcast"
+          case j: ShuffledHashJoinExec if onLabel(j.leftKeys) => "shuffle_hash"
+        }).distinct
+      (got.map(r => (r.getLong(0), labels.indexOf(r.getString(1)), r.getDouble(2),
+        r.getBoolean(3))).sortBy(r => (r._1, r._2)), labelJoins)
+    }
+    val (short, shortJoins) = run(shortLabels)
+    val (long, longJoins) = run(longLabels)
+    assert(shortJoins === List("broadcast"))
+    assert(longJoins === List("shuffle_hash"))
+    // the join strategy does not change the answer
+    assert(short.size === long.size)
+    short.zip(long).foreach { case (a, b) =>
+      assert(a._1 === b._1 && a._2 === b._2 && a._4 === b._4)
+      assert(d(a._3, b._3), s"item ${a._1} label ${a._2}: ${a._3} vs ${b._3}")
+    }
+    short.filter(_._4).foreach(r => assert(r._2 === r._1 % 10))
+  }
+
   test("ebShrinkMeans: hand-computed moment estimates and blend") {
     // g1: (0,2) mean 1, se2 1; g2: (10,12) mean 11, se2 1
     // center 6, vb 50, mse2 1 → τ² 49, w .98, shrunk(g1) 1.1
